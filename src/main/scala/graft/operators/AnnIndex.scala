@@ -107,8 +107,9 @@ object AnnIndex {
     val cdf = cents.zipWithIndex.toIndexedSeq
       .map { case (c, m) => (m.toLong, c.toSeq) }
       .toDF("cell", "c")
-    Materialize.publishAudited(cdf, centroidsTable(name),
-      Seq(NotNull("cell"), NotNull("c"), Unique(Seq("cell"))))
+    Materialize.publishSetAudited(centroidsTable(name), Seq(
+      Materialize.Member(cdf, centroidsTable(name),
+        Seq(NotNull("cell"), NotNull("c"), Unique(Seq("cell"))))))
     Materialize.partitionedTable(
       KMeans.withCellDist(vq, "__vq", cents)
         .select(col("id") +: col("vec") +: attrCols.map(col) :+
@@ -361,7 +362,7 @@ object AnnIndex {
     * and only when `retrained − frozen > threshold` (absolute recall
     * points — the q249 fixture reads a ~0.03 gap) swaps the retrained
     * centroids AND re-binned postings in as ONE all-or-nothing set
-    * ([[Materialize.publishSetAuditedP]], postings staged PARTITIONED
+    * ([[Materialize.publishSetAudited]], postings staged PARTITIONED
     * BY cell): a crash mid-swap can never leave new centroids over
     * old cell assignments, which would silently break every
     * subsequent cell-scoped append/search. Below the threshold it
@@ -376,21 +377,21 @@ object AnnIndex {
     * scans; the swap cost is one re-binned postings rewrite, paid
     * only when buying the measured recall back.
     *
-    * Crash recovery: the swap is a [[Materialize.publishSetAuditedP]]
+    * Crash recovery: the swap is a [[Materialize.publishSetAudited]]
     * under set name `<name>_retrain` — a crash mid-swap leaves the
     * `<name>_retrain__swapping` marker, and
-    * `Materialize.recoverSet(spark, s"${name}_retrain",
-    * Seq(centroidsTable(name), postingsTable(name)))` rolls the index
+    * `Materialize.recoverSet(spark, s"${name}_retrain")` rolls the index
     * back to one consistent generation (spec: "a crash mid-retrain-swap
-    * is recoverable"). `crashAfterSwap` is TEST-ONLY fault injection,
-    * forwarded to the publish. */
+    * is recoverable"). `crashAfter` is TEST-ONLY fault injection,
+    * forwarded to the publish (centroids are member 0, postings
+    * member 1). */
   def maintainWithRetrain(spark: SparkSession, name: String,
       queries: DataFrame, queryIdCol: String, queryVecCol: String,
       k: Int, cells: Int, dims: Int, iters: Int,
-      threshold: Double, crashAfterSwap: Int = -1)
+      threshold: Double, crashAfter: Int = -1)
       : (Double, Double, Boolean) = {
     val o = measureAndMaybeSwap(spark, name, queries, queryIdCol,
-      queryVecCol, k, cells, dims, iters, threshold, crashAfterSwap)
+      queryVecCol, k, cells, dims, iters, threshold, crashAfter)
     (o.frozenRecall, o.retrainedRecall, o.swapped)
   }
 
@@ -410,10 +411,10 @@ object AnnIndex {
   def maintainMonitored(spark: SparkSession, name: String,
       queries: DataFrame, queryIdCol: String, queryVecCol: String,
       k: Int, cells: Int, dims: Int, iters: Int, threshold: Double,
-      maxFiles: Int = 1, crashAfterSwap: Int = -1): DataFrame = {
+      maxFiles: Int = 1, crashAfter: Int = -1): DataFrame = {
     val compacted = maintain(spark, name, maxFiles).size.toLong
     val o = measureAndMaybeSwap(spark, name, queries, queryIdCol,
-      queryVecCol, k, cells, dims, iters, threshold, crashAfterSwap)
+      queryVecCol, k, cells, dims, iters, threshold, crashAfter)
     import spark.implicits._
     Seq(
       ("ivf_frozen", o.nExact, o.frozenHits,
@@ -439,7 +440,7 @@ object AnnIndex {
   private def measureAndMaybeSwap(spark: SparkSession, name: String,
       queries: DataFrame, queryIdCol: String, queryVecCol: String,
       k: Int, cells: Int, dims: Int, iters: Int,
-      threshold: Double, crashAfterSwap: Int): RetrainOutcome = try {
+      threshold: Double, crashAfter: Int): RetrainOutcome = try {
     // full rows minus the stale cell: the re-bin must publish the
     // attribute payload back, or a retrain swap would silently strip
     // every filterable column from an attribute-carrying index
@@ -490,16 +491,15 @@ object AnnIndex {
       // with nothing — row-level audits hold vacuously on zero rows
       // (retraining a legitimately empty index fails the gate loudly,
       // which is the right answer for a nonsense operation)
-      val (ok, _) = Materialize.publishSetAuditedP(s"${name}_retrain", Seq(
-        (cdf, centroidsTable(name),
+      val (ok, _) = Materialize.publishSetAudited(s"${name}_retrain", Seq(
+        Materialize.Member(cdf, centroidsTable(name),
           Seq(NonEmpty(), NotNull("cell"), NotNull("c"),
-            Unique(Seq("cell"))),
-          Option.empty[String]),
-        (assigned, postingsTable(name),
+            Unique(Seq("cell")))),
+        Materialize.Member(assigned, postingsTable(name),
           Seq(NonEmpty(), NotNull("id"), NotNull("cell"),
             Unique(Seq("id"))),
           Some("cell"))),
-        crashAfterSwap = crashAfterSwap)
+        crashAfter = crashAfter)
       ok
     }
     pre.copy(swapped = published)

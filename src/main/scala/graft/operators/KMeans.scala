@@ -86,7 +86,7 @@ object KMeans {
     * form-agnostic (KMeansSpec pins equality across the threshold). */
   private[graft] val SmallK = 16
 
-  /** TEST-ONLY escape hatch (same class as `crashAfterStep` fault
+  /** TEST-ONLY escape hatch (same class as the publish `crashAfter` fault
     * injection): forces the HOF form below the threshold so the spec
     * can pin bit-equality of BOTH forms at the SAME k. Never set in
     * production paths; leaving it on merely costs speed, never

@@ -23,12 +23,14 @@ import org.apache.spark.sql.SparkSession
   * scoped restore can never yank the mode out from under a sibling's
   * in-flight write. Every branch is joined before return; the first
   * failure rethrows AFTER all branches finish (no abandoned in-flight
-  * write commits into a torn state).
+  * write commits into a torn state), carrying every sibling failure as
+  * suppressed — none is dropped.
   */
 object Par {
 
   /** Run every thunk concurrently; rethrow the first failure once all
-    * have finished. Degenerate sizes run inline. */
+    * have finished, with the others attached via `addSuppressed`.
+    * Degenerate sizes run inline. */
   def run(spark: SparkSession)(thunks: (() => Unit)*): Unit = {
     if (thunks.lengthCompare(1) <= 0) { thunks.foreach(_()); return }
     val failures = new ConcurrentLinkedQueue[Throwable]()
@@ -40,6 +42,10 @@ object Par {
       th.start(); th
     }
     threads.foreach(_.join())
-    if (!failures.isEmpty) throw failures.peek()
+    if (!failures.isEmpty) {
+      val first = failures.poll()
+      failures.forEach(e => if (e ne first) first.addSuppressed(e))
+      throw first
+    }
   }
 }

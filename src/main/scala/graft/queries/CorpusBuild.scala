@@ -270,11 +270,10 @@ object CorpusBuild {
             sum(col("tok")).cast("long").as("shard_tokens"),
             min(col("doc_id")).as("first_doc"),
             max(col("doc_id")).as("last_doc"))
-        val (ok, a) = Materialize.publishAudited(manifest,
-          s"e2e_corpus_manifest_$h",
-          Seq(NotNull("shard"), NotNull("shard_tokens"),
-            Unique(Seq("shard"))))
-        publishOk = ok; audit = a
+        val (ok, a) = Materialize.publishSetAudited(corpusSet(h), Seq(
+          Materialize.Member(manifest, s"e2e_corpus_manifest_$h",
+            ManifestChecks)))
+        publishOk = ok; audit = a.flatMap(_._2)
       })
 
     // read back from the catalog: the report describes the PUBLISHED
@@ -345,8 +344,8 @@ object CorpusBuild {
     *  - decontamination runs BOTH directions: new candidates vs all
     *    probes, and the published corpus vs the new probes — new eval
     *    docs retroactively protect the benchmark;
-    *  - curated corpus, probe set, and manifest republish through the
-    *    same WAP audit gate ([[Materialize.publishAudited]]); the
+    *  - probe set and manifest republish through the same WAP audit
+    *    gate ([[Materialize.publishSetAudited]]); the
     *    `Unique(doc_id)` audit makes an ingest-contract violation
     *    refuse the publish instead of corrupting the corpus.
     *
@@ -503,10 +502,10 @@ object CorpusBuild {
       // republish the eval set (WAP staging+swap makes rewriting a
       // table the plan reads safe)
       () => {
-        val (ok, a) = Materialize.publishAudited(
-          spark.table(probesT).unionByName(newProbes),
-          probesT, Seq(NotNull("doc_id"), Unique(Seq("doc_id"))))
-        probesOk = ok; probesAudit = a
+        val (ok, a) = Materialize.publishSetAudited(corpusSet(h), Seq(
+          Materialize.Member(spark.table(probesT).unionByName(newProbes),
+            probesT, ProbeChecks)))
+        probesOk = ok; probesAudit = a.flatMap(_._2)
       })
     // each republish boundary drops operator-internal persisted
     // frames: a persisted plan over the REPLACED version sameResult-
@@ -634,8 +633,9 @@ object CorpusBuild {
     // insertInto is positional: (doc_id, gh) data columns, pt last.
     // rows_final rides the manifest repack's curated scan — no count
     // action of its own.
-    var manifestOut: (Boolean, Seq[Quality.Result],
-      org.apache.spark.sql.Row, Long) = null
+    val (manifest, rowsObs) = repackManifest(spark, h)
+    var publishOk = false
+    var audit: Seq[Quality.Result] = Seq.empty
     graft.operators.Par.run(spark)(
       () => {
         TextDedup.docShingleRows(addKept, "doc_id", "text", Llm.DcN)
@@ -649,9 +649,14 @@ object CorpusBuild {
         // the next batch's retro lookup reads the pre-append listing
         Materialize.refresh(spark, gramsT)
       },
-      () => { manifestOut = republishManifest(spark, h) })
+      () => {
+        val (ok, a) =
+          Materialize.publishSetAudited(corpusSet(h), Seq(manifest))
+        publishOk = ok; audit = a.flatMap(_._2)
+      })
     graft.operators.InternalCache.release() // see probes republish
-    val (publishOk, audit, m, rowsFinal) = manifestOut
+    val m = manifestReadBack(spark, h)
+    val rowsFinal = Quality.obsLong(rowsObs, "rows_final")
     // Quality.obsLong, NEVER a raw map read: a fully-duplicate or
     // replayed delta stages ZERO rows, AQE's empty-relation propagation
     // then prunes the CollectMetrics nodes, and a strict o.get(k) dies
@@ -683,13 +688,24 @@ object CorpusBuild {
     report.toDF("step", "relation", "metric", "value")
   }
 
-  /** Repack and WAP-republish the shard manifest from the current
-    * curated table; returns (published?, audit results, metrics row
-    * with n_shards/total_tokens/max_shard_tokens). Shared by
-    * [[runIncremental]] and [[eraseDocs]] so the manifest contract
-    * cannot drift between the lifecycle paths. */
-  private def republishManifest(spark: SparkSession, h: String)
-      : (Boolean, Seq[Quality.Result], org.apache.spark.sql.Row, Long) = {
+  /** The one publish set every corpus artifact releases through: its
+    * marker is the mutex of all of a corpus's probe-set and manifest
+    * publishes, whichever members each one carries. The marker names
+    * the members in flight, so `Materialize.recoverSet(spark,
+    * s"e2e_corpus_$h")` repairs a crash in any of them. */
+  private def corpusSet(h: String): String = s"e2e_corpus_$h"
+
+  private val ManifestChecks =
+    Seq(NotNull("shard"), NotNull("shard_tokens"), Unique(Seq("shard")))
+  private val ProbeChecks = Seq(NotNull("doc_id"), Unique(Seq("doc_id")))
+
+  /** The shard manifest repacked from the current curated table, as a
+    * publish-set member for the caller to release, plus the
+    * observation its staging write fills with the curated row count
+    * (`rows_final`). Shared by [[runIncremental]] and [[eraseDocs]] so
+    * the manifest contract cannot drift between the lifecycle paths. */
+  private def repackManifest(spark: SparkSession, h: String)
+      : (Materialize.Member, org.apache.spark.sql.Observation) = {
     val packed = Ranking.withRunningTotal(
       spark.table(s"e2e_corpus_curated_$h")
         .select(col("doc_id"), col("tok")),
@@ -705,11 +721,8 @@ object CorpusBuild {
         sum(col("tok")).cast("long").as("shard_tokens"),
         min(col("doc_id")).as("first_doc"),
         max(col("doc_id")).as("last_doc"))
-    val (ok, audit) = Materialize.publishAudited(manifest,
-      s"e2e_corpus_manifest_$h",
-      Seq(NotNull("shard"), NotNull("shard_tokens"), Unique(Seq("shard"))))
-    (ok, audit, manifestReadBack(spark, h),
-      Quality.obsLong(rowsObs, "rows_final"))
+    (Materialize.Member(manifest, s"e2e_corpus_manifest_$h",
+      ManifestChecks), rowsObs)
   }
 
   /** Catalog read-back of the published manifest's summary metrics.
@@ -743,9 +756,10 @@ object CorpusBuild {
     * corpus and the decontamination gram index (both partition-scoped
     * rewrites of ONLY the touched `pt` slices via
     * [[Materialize.eraseKeys]]; the rest of a 100 TB corpus is never
-    * read or written), and the eval probe set (WAP republish) — then
-    * the shard manifest is repacked so no published artifact
-    * references an erased doc. Returns the audit report a DPO wants:
+    * read or written) — then the eval probe set and the repacked
+    * shard manifest republish as ONE audited set, so no published
+    * artifact references an erased doc and a failed audit leaves
+    * neither half-erased. Returns the audit report a DPO wants:
     * rows deleted per artifact, partitions rewritten, and the
     * republished-manifest state.
     *
@@ -826,39 +840,33 @@ object CorpusBuild {
     // inside eraseKeysIn then always restore to "dynamic", so no
     // thread can yank the mode out from under a sibling's in-flight
     // write.
-    val failures =
-      new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
     Materialize.withDynamicOverwrite(spark) {
-      val threads = Seq(
+      graft.operators.Par.run(spark)(Seq(
         curatedT -> pre("curated")._2, gramsT -> pre("grams")._2,
         bandsT -> pre("bands")._2, removedT -> pre("removed")._2)
-        .map { case (t, pts) =>
-          val th = new Thread(() => {
-            org.apache.spark.sql.SparkSession.setActiveSession(spark)
-            try Materialize.eraseKeysIn(spark, t, "doc_id", ids, "pt",
-              pts)
-            catch { case e: Throwable => failures.add(e); () }
-          })
-          th.start(); th
-        }
-      threads.foreach(_.join())
+        .map { case (t, pts) => () =>
+          Materialize.eraseKeysIn(spark, t, "doc_id", ids, "pt", pts)
+        }: _*)
     }
-    if (!failures.isEmpty) throw failures.peek()
-    // the probe set is corpus-bounded-small (1/DcProbeEvery of the
-    // docs) — a WAP republish, so a failed audit can never leave a
-    // half-erased eval set
-    val (probesOk, probesAudit) =
-      if (nProbes == 0L) (true, Seq.empty[Quality.Result])
-      else Materialize.publishAudited(
-        spark.table(probesT)
-          .join(broadcast(ids), Seq("doc_id"), "left_anti"),
-        probesT, Seq(NotNull("doc_id"), Unique(Seq("doc_id"))))
-    // republish boundary: drop operator-internal persisted frames so
-    // nothing downstream reads a pre-swap file listing
+    // drop operator-internal persisted frames before the manifest
+    // repack, so nothing downstream reads a pre-rewrite file listing
     graft.operators.InternalCache.release()
 
-    // rows_final rides the manifest repack's curated scan
-    val (publishOk, audit, m, rowsFinal) = republishManifest(spark, h)
+    // the probe set (corpus-bounded-small: 1/DcProbeEvery of the docs)
+    // and the repacked manifest release as ONE set: a failed audit on
+    // either leaves neither half-erased. rows_final rides the manifest
+    // repack's curated scan.
+    val (manifest, rowsObs) = repackManifest(spark, h)
+    val probes =
+      if (nProbes == 0L) Nil
+      else Seq(Materialize.Member(
+        spark.table(probesT)
+          .join(broadcast(ids), Seq("doc_id"), "left_anti"),
+        probesT, ProbeChecks))
+    val (published, results) =
+      Materialize.publishSetAudited(corpusSet(h), probes :+ manifest)
+    val m = manifestReadBack(spark, h)
+    val rowsFinal = Quality.obsLong(rowsObs, "rows_final")
     val report: Seq[Metric] = Seq[Metric](
       ("erase", "curated", "docs_erased", nCurated),
       ("erase", "curated", "partitions_rewritten", nParts),
@@ -871,10 +879,9 @@ object CorpusBuild {
       ("shards", "manifest", "total_tokens", m.getAs[Long]("total_tokens")),
       ("shards", "manifest", "max_shard_tokens",
         m.getAs[Long]("max_shard_tokens")),
-      ("shards", "manifest", "published",
-        if (probesOk && publishOk) 1L else 0L),
+      ("shards", "manifest", "published", if (published) 1L else 0L),
       ("shards", "manifest", "audit_violations",
-        (probesAudit ++ audit).map(_.violations).sum))
+        results.flatMap(_._2).map(_.violations).sum))
     graft.operators.InternalCache.release()
     import spark.implicits._
     report.toDF("step", "relation", "metric", "value")

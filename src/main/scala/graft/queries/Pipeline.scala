@@ -1160,13 +1160,14 @@ object Pipeline {
 
   // ------------------------------------------------------------ q160
 
-  /** Write-audit-publish lifecycle ([[Materialize.publishAudited]]):
-    * a clean mart build passes its audit and publishes; a subsequent
-    * POISONED rebuild (status nulled for urgent orders — a simulated
-    * broken upstream) fails `not_null` and is rejected, leaving the
-    * published table exactly at version 1. Readers can never observe
-    * the bad build: publish is a catalog swap after the audit, and a
-    * reject drops only the invisible staging table. Output: the audit
+  /** Write-audit-publish lifecycle (a one-member
+    * [[Materialize.publishSetAudited]] set): a clean mart build passes
+    * its audit and publishes; a subsequent POISONED rebuild (status
+    * nulled for urgent orders — a simulated broken upstream) fails
+    * `not_null` and is rejected, leaving the published table exactly
+    * at version 1. Readers can never observe the bad build: publish is
+    * a catalog swap after the audit, and a reject drops only the
+    * invisible staging table. Output: the audit
     * trail of both attempts joined with the FINAL table state (which
     * must equal the v1 build in both rows and total). */
   val q160 = Query(
@@ -1188,14 +1189,19 @@ object Pipeline {
     val checks = Seq(NotNull("o_orderstatus"))
     val mart = Tables.orders(s, dir)
       .groupBy(col("o_orderstatus")).agg(count(lit(1)).as("n"))
-    val (ok1, r1) = Materialize.publishAudited(mart, "wap_mart", checks)
+    def publish(df: org.apache.spark.sql.DataFrame) = {
+      val (ok, r) = Materialize.publishSetAudited("wap_mart",
+        Seq(Materialize.Member(df, "wap_mart", checks)))
+      (ok, r.head._2)
+    }
+    val (ok1, r1) = publish(mart)
     // poisoned rebuild: urgent orders lose their status upstream
     val poisoned = Tables.orders(s, dir)
       .withColumn("o_orderstatus",
         when(col("o_orderpriority") === "1-URGENT", lit(null))
           .otherwise(col("o_orderstatus")))
       .groupBy(col("o_orderstatus")).agg(count(lit(1)).as("n"))
-    val (ok2, r2) = Materialize.publishAudited(poisoned, "wap_mart", checks)
+    val (ok2, r2) = publish(poisoned)
     val finalState = s.table("wap_mart")
       .agg(count(lit(1)).as("final_status_rows"),
         sum(col("n")).as("final_orders"))

@@ -32,16 +32,16 @@ import org.apache.spark.sql.SparkSession
   * (O(1)) and reclaiming (O(garbage), schedulable).
   *
   * Commit protocol (single writer per table, the publisher contract):
-  *  1. write the generation's data files under `gen-<seq>/` —
-  *     invisible (no manifest names them);
+  *  1. write the generation's data files under `gen-<seq>-<uuid>/`
+  *     (fresh per attempt) — invisible (no manifest names them);
   *  2. write `_manifests/m-<seq>.json` to a temp name and RENAME it
   *     into place — the one atomic step. Rename-to-fresh-path is
   *     atomic on HDFS and local filesystems; a reader lists the
   *     manifest directory and takes the highest sequence, so a
   *     half-written temp file is never eligible.
   * A crash before step 2 leaves an unreferenced directory (readers
-  * see the previous state bit-exactly); a replay overwrites it and
-  * commits the next sequence. Generation directories are IMMUTABLE
+  * see the previous state bit-exactly); a replay writes a fresh
+  * directory and commits the next sequence. Generation directories are IMMUTABLE
   * once referenced — readers never need a cache refresh (contrast the
   * catalog table's refresh-after-write dance).
   *
@@ -116,11 +116,14 @@ object CkptStore {
   def commit(spark: SparkSession, table: String, wm: String,
       crashAfterStep: Int = -1)(writeData: String => Unit): Manifest = {
     val seq = current(spark, table).map(_.seq + 1L).getOrElse(0L)
-    val dirName = f"gen-$seq%06d"
+    // unique per ATTEMPT, not per sequence: a concurrent writer that
+    // read the same `seq` lands its files in its own directory, so the
+    // loser of the manifest-rename race can never overwrite the files
+    // the winner's manifest names. A crashed attempt's directory is
+    // unreferenced garbage for deleteStaleGens.
+    val dirName = f"gen-$seq%06d-${java.util.UUID.randomUUID()}"
     val gp = genPath(spark, table, dirName)
     val fs = hadoopFs(spark, gp)
-    // a crashed prior attempt at this sequence left an unreferenced
-    // directory — the overwrite-mode data write below replaces it
     writeData(gp.toString)
     if (crashAfterStep == 0) throw new Materialize.CrashInjected(0)
     val md = manifestDir(spark, table)

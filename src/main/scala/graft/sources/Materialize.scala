@@ -614,7 +614,7 @@ object Materialize {
     * and absorbing, so re-running the same increment from any partial
     * state converges to the clean-apply state, and a duplicate apply
     * is a content no-op. Publish-grade tables that need an atomic
-    * all-or-nothing promotion go through [[publishAudited]] instead. */
+    * all-or-nothing promotion go through [[publishSetAudited]] instead. */
   def tableIncremental(spark: SparkSession, name: String,
       increment: DataFrame, keys: Seq[String], orderCol: String,
       partitionCol: String): DataFrame = {
@@ -881,93 +881,10 @@ object Materialize {
     affected
   }
 
-  /** Write-audit-publish (the Iceberg/dbt "WAP" release pattern, the
-    * blue-green form of the reference's test-then-promote CI gate,
-    * reference `.github/workflows/dbt-ci.yml:36-42`): the new build is
-    * staged under an invisible name, the quality suite runs against
-    * the STAGED files, and only a fully passing audit swaps it in.
-    * Readers therefore never observe a half-written or failing table:
-    * publish is a catalog rename (O(1) metadata — data files are
-    * written once and never copied), and a failed audit drops the
-    * staging table leaving the previous published version untouched.
-    *
-    * Returns (published?, audit results). `warnAsError` promotes
-    * warn-tier checks to blocking, dbt `--warn-error` parity.
-    *
-    * `crashAfterStep` is TEST-ONLY fault injection: ≥0 throws
-    * [[CrashInjected]] after the numbered step of the swap sequence
-    * completes (0 staging written, 1 audit run, 2 prev dropped,
-    * 3 rename-aside, 4 rename-in), so the crash-consistency spec
-    * exercises the REAL op order instead of hand-modeled states. */
-  def publishAudited(df: DataFrame, name: String,
-      checks: Seq[graft.quality.Check], warnAsError: Boolean = false,
-      crashAfterStep: Int = -1)
-      : (Boolean, Seq[graft.quality.Quality.Result]) = {
-    def crash(step: Int): Unit =
-      if (crashAfterStep == step) throw new CrashInjected(step)
-    val spark = df.sparkSession
-    val staging = name + "__staging"
-    table(df, staging)
-    crash(0)
-    // one action for the whole audit suite (run() pays one per check).
-    // A hidden NonEmpty leg rides the same union — zero extra jobs —
-    // so the post-swap guard below can tell "rename lost the staged
-    // rows" from a legitimately empty publish without its own probe.
-    val counts = graft.quality.Quality.countsOnce(Seq(
-      spark.table(staging) -> (checks :+ graft.quality.NonEmpty()))).head
-    val results =
-      graft.quality.Quality.resultsOf(checks, counts.init, warnAsError)
-    crash(1)
-    val ok = results.forall(_.passed)
-    if (ok) {
-      val stagedNonEmpty = counts.last == 0L
-      // Swap via rename-aside, NOT drop-then-rename: the previous
-      // version keeps existing (as <name>__prev) until the new one is
-      // in place, so a crash mid-publish can always be recovered from
-      // files on disk — never "no published table and data deleted".
-      // The remaining non-atomic window (between the two renames,
-      // <name> resolves to nothing) is inherent to a catalog without
-      // multi-op transactions; recoverPrev() documents the repair.
-      val prev = name + "__prev"
-      dropTable(spark, s"$prev")
-      dropOrphanLocation(spark, prev)
-      crash(2)
-      if (spark.catalog.tableExists(name))
-        renameTable(spark, name, prev)
-      crash(3)
-      // a previous JVM's published table may survive as files with no
-      // catalog entry (in-memory catalog died) — clear the orphan or
-      // the rename refuses with LOCATION_ALREADY_EXISTS
-      dropOrphanLocation(spark, name)
-      val renamedPartitioned = renameTable(spark, staging, name)
-      // a catalog RENAME does not touch the cache manager: any
-      // persisted plan over the OLD version canonicalizes to the same
-      // relation (same warehouse location) and would keep serving
-      // stale blocks to every post-publish reader in this session —
-      // found live when runIncremental's manifest read the pre-merge
-      // corpus. Publishing must invalidate readers' caches.
-      refresh(spark, name)
-      // the audits ran on the STAGED files; a PARTITIONED rename is
-      // the one step that can lose them (partition metadata left at
-      // the old path — the class renameTable repairs). One limit-1
-      // probe, paid only for partitioned publishes, turns any residual
-      // silent-empty into a loud failure while the __prev generation
-      // still exists on disk. An unpartitioned rename moves the whole
-      // directory — nothing to lose silently, no probe.
-      if (renamedPartitioned && stagedNonEmpty)
-        require(!spark.table(name).isEmpty,
-          s"publish of $name: staged rows lost in the swap")
-      crash(4)
-      dropTable(spark, s"$prev")
-    } else {
-      dropTable(spark, s"$staging")
-    }
-    (ok, results)
-  }
-
-  /** The injected failure [[publishAudited]]'s `crashAfterStep` throws
-    * — its own type so specs can intercept it without masking real
-    * errors from the same code path. */
+  /** The injected failure a TEST-ONLY crash parameter throws
+    * ([[publishSetAudited]]'s `crashAfter`, [[CkptStore.commit]]'s
+    * `crashAfterStep`) — its own type so specs can intercept it
+    * without masking real errors from the same code path. */
   final class CrashInjected(step: Int)
     extends RuntimeException(s"injected crash after step $step")
 
@@ -980,7 +897,7 @@ object Materialize {
     * promised 1.0 vacuously). `MSCK REPAIR` re-registers partitions
     * from the moved directory: one metadata listing of the table dir,
     * paid only on publish/recovery renames. Every rename in the
-    * publish/recover protocols must go through here. */
+    * publish/recover protocol must go through here. */
   private[graft] def renameTable(spark: SparkSession, from: String,
       to: String): Boolean = {
     val partitioned =
@@ -992,55 +909,52 @@ object Materialize {
     partitioned
   }
 
-  /** Crash repair for [[publishAudited]]: if a crash landed between
-    * the rename-aside and the rename-in, the published name is gone
-    * but the previous version survives as `<name>__prev` — restore it.
-    * Idempotent; a no-op when `name` exists. Returns true if a
-    * restore happened. */
-  def recoverPrev(spark: SparkSession, name: String): Boolean = {
-    val prev = name + "__prev"
-    if (!spark.catalog.tableExists(name) &&
-        spark.catalog.tableExists(prev)) {
-      dropOrphanLocation(spark, name)
-      renameTable(spark, prev, name)
-      refresh(spark, name) // same staleness class as publish
-      true
-    } else false
-  }
+  /** One member of a publish set: the frame to stage, the published
+    * table name, its audit suite, and an optional partition column. A
+    * `Some(col)` member stages — and therefore publishes, the swap
+    * being a metadata rename that keeps layout — PARTITIONED BY that
+    * column, for tables their readers partition-prune (e.g. ANN
+    * postings cell-partitioned for `PartitionFilters` search). */
+  final case class Member(df: DataFrame, name: String,
+      checks: Seq[graft.quality.Check], partitionCol: Option[String] = None)
 
-  /** Multi-TABLE write-audit-publish — the all-or-nothing release a
-    * composed build needs (the dbt `build` promotion semantic: the
-    * whole DAG ships or nothing does). [[publishAudited]] per table
-    * cannot give that: if mart 2-of-2 fails its audit after mart 1
-    * published, readers see a MIXED release — a new mart beside a
-    * stale sibling it was built with. Here every table stages, every
-    * staging is audited, and only if ALL pass does any swap happen;
-    * a failing audit drops all stagings and every published table
-    * keeps serving its previous version.
+  /** Write-audit-publish (the Iceberg/dbt "WAP" release pattern, the
+    * blue-green form of the reference's test-then-promote CI gate,
+    * reference `.github/workflows/dbt-ci.yml:36-42`) for a SET of
+    * tables — the library's one publish protocol; a single table is a
+    * one-member set. Every member is staged under an invisible name,
+    * the quality suite runs against the STAGED files, and only if
+    * EVERY member passes does any swap happen (the dbt `build`
+    * promotion semantic: the whole DAG ships or nothing does — never a
+    * new mart beside a stale sibling it was built with). A failing
+    * audit drops all stagings and every published table keeps serving
+    * its previous version. Publish is a catalog rename (O(1) metadata
+    * — data files are written once and never copied).
     *
-    * The swap phase is still a sequence of per-table renames (a
-    * catalog without multi-op transactions cannot make it one atomic
-    * op), so a crash mid-swap can leave a mixed set on disk. The
-    * protocol makes that window RECOVERABLE instead of silent:
+    * Returns (published?, per-member audit results). `warnAsError`
+    * promotes warn-tier checks to blocking, dbt `--warn-error` parity.
     *
-    *  1. create the `<setName>__swapping` marker table — ATOMICALLY
-    *     (the catalog's create-if-absent is the mutex): a concurrent
-    *     publisher, or a session racing an unrecovered crash, fails
-    *     loudly HERE, before it can stage over anything;
-    *  2. stage all `<name>__staging`;
+    * The swap phase is a sequence of per-table renames (a catalog
+    * without multi-op transactions cannot make it one atomic op), so a
+    * crash mid-swap can leave a mixed set on disk. The protocol makes
+    * every such window RECOVERABLE instead of silent:
+    *
+    *  1. create the `<setName>__swapping` marker table, naming the
+    *     members in publish order — ATOMICALLY (the catalog's
+    *     create-if-absent is the mutex): a concurrent publisher, or a
+    *     session racing an unrecovered crash, fails loudly HERE,
+    *     before it can stage over anything;
+    *  2. stage every `<name>__staging`, in member order;
     *  3. audit all (fail → drop stagings + marker, previous versions
     *     serve);
-    *  4. per table: drop old `__prev`, rename name→prev,
-    *     rename staging→name (prevs are KEPT until step 5 — unlike
-    *     the single-table gate, rollback must stay possible until the
-    *     whole set is in);
+    *  4. per member, in order: drop old `__prev`, rename name→prev
+    *     (rename-ASIDE, not drop: the previous version exists on disk
+    *     until the whole set is in, so rollback stays possible),
+    *     rename staging→name;
     *  5. drop all prevs, drop the marker.
     *
     * [[recoverSet]] inspects the states and rolls the set to ONE
-    * generation: forward when every table already swapped (no
-    * stagings remain under the marker), back otherwise. The marker
-    * disambiguates the one otherwise-ambiguous state (a first-publish
-    * table whose name exists with neither staging nor prev).
+    * generation.
     *
     * Writer concurrency contract: ONE publisher per set name at a
     * time, enforced by the marker-as-mutex; losers of the race get an
@@ -1049,38 +963,124 @@ object Materialize {
     * blocked — they see the previous generation until step 4 swaps
     * their table.
     *
-    * `crashAfterSwap` is TEST-ONLY fault injection: k ∈ [0, n) throws
-    * [[CrashInjected]] after table k's rename-in; k = n throws after
-    * all swaps, before cleanup. */
-  def publishSetAudited(setName: String,
-      tables: Seq[(DataFrame, String, Seq[graft.quality.Check])],
-      warnAsError: Boolean = false, crashAfterSwap: Int = -1)
-      : (Boolean, Seq[(String, Seq[graft.quality.Quality.Result])]) =
-    publishSetAuditedP(setName,
-      tables.map { case (df, n, c) => (df, n, c, Option.empty[String]) },
-      warnAsError, crashAfterSwap)
-
-  /** [[publishSetAudited]] with per-table OPTIONAL partition layout:
-    * a `Some(col)` table stages (and therefore publishes — the swap is
-    * a metadata rename that keeps layout) PARTITIONED BY that column.
-    * Needed when a member of an atomic set is partition-pruned by its
-    * readers (e.g. an ANN postings table cell-partitioned for
-    * `PartitionFilters` search pruning). */
-  def publishSetAuditedP(setName: String,
-      tables: Seq[(DataFrame, String, Seq[graft.quality.Check],
-        Option[String])],
-      warnAsError: Boolean = false, crashAfterSwap: Int = -1)
+    * `crashAfter` is TEST-ONLY fault injection: k ≥ 0 throws
+    * [[CrashInjected]] after the k-th step of the sequence completes,
+    * counting from 0 over n members: marker taken (0); member i staged
+    * (1 + i); audit run (n + 1); for member i, prev dropped
+    * (n + 2 + 3i), renamed aside (n + 3 + 3i), renamed in (n + 4 + 3i);
+    * before cleanup (4n + 2). Any other failure before the first
+    * rename drops this call's stagings and frees the marker: nothing
+    * was swapped, so there is nothing to recover. */
+  def publishSetAudited(setName: String, members: Seq[Member],
+      warnAsError: Boolean = false, crashAfter: Int = -1)
       : (Boolean, Seq[(String, Seq[graft.quality.Quality.Result])]) = {
-    require(tables.nonEmpty, "empty publish set")
-    val spark = tables.head._1.sparkSession
-    val marker = s"${setName}__swapping"
-    // marker-as-mutex, taken FIRST: the atomic catalog create is the
-    // concurrency gate. A bare tableExists pre-check would leave a
-    // TOCTOU window in which a second publisher stages over the
-    // winner's stagings before either creates the marker.
+    require(members.nonEmpty, "empty publish set")
+    val spark = members.head.df.sparkSession
+    var step = -1
+    def stepDone(): Unit = {
+      step += 1
+      if (step == crashAfter) throw new CrashInjected(step)
+    }
+    // last member's staging first: a crash part-way leaves the marker
+    // and the FIRST members' stagings, which recoverSet reads as the
+    // staging phase (nothing swapped)
+    def abandon(): Unit = {
+      members.reverse.foreach(m => dropTable(spark, s"${m.name}__staging"))
+      dropTable(spark, markerOf(setName))
+    }
+    takeMarker(spark, setName, members.map(_.name))
+    stepDone()
+    val (counts, results) = try {
+      members.foreach { m =>
+        val staging = s"${m.name}__staging"
+        m.partitionCol match {
+          case Some(c) => partitionedTable(m.df, staging, c)
+          case None => table(m.df, staging)
+        }
+        stepDone()
+      }
+      // ONE action audits every staged table's whole suite (the gate is
+      // the action-count hot spot of every composed build that publishes
+      // through it). A hidden NonEmpty leg per member rides the same
+      // union — zero extra jobs — so the post-swap guard below can tell
+      // "rename lost the staged rows" from a legitimately empty publish.
+      val counts = graft.quality.Quality.countsOnce(members.map { m =>
+        spark.table(s"${m.name}__staging") ->
+          (m.checks :+ graft.quality.NonEmpty()) })
+      val results = members.zip(counts).map { case (m, cs) =>
+        m.name -> graft.quality.Quality.resultsOf(m.checks, cs.init,
+          warnAsError)
+      }
+      stepDone()
+      (counts, results)
+    } catch {
+      case e: CrashInjected => throw e
+      case scala.util.control.NonFatal(e) =>
+        try abandon()
+        catch { case scala.util.control.NonFatal(s) => e.addSuppressed(s) }
+        throw e
+    }
+    if (!results.forall(_._2.forall(_.passed))) {
+      abandon()
+      return (false, results)
+    }
+    members.zip(counts).foreach { case (m, cs) =>
+      val prev = s"${m.name}__prev"
+      dropTable(spark, prev)
+      dropOrphanLocation(spark, prev)
+      stepDone()
+      if (spark.catalog.tableExists(m.name))
+        renameTable(spark, m.name, prev)
+      stepDone()
+      // a previous JVM's published table may survive as files with no
+      // catalog entry (in-memory catalog died) — clear the orphan or
+      // the rename refuses with LOCATION_ALREADY_EXISTS
+      dropOrphanLocation(spark, m.name)
+      val renamedPartitioned =
+        renameTable(spark, s"${m.name}__staging", m.name)
+      // a catalog RENAME does not touch the cache manager: any
+      // persisted plan over the OLD version canonicalizes to the same
+      // relation (same warehouse location) and would keep serving
+      // stale blocks to every post-publish reader in this session —
+      // found live when runIncremental's manifest read the pre-merge
+      // corpus. Publishing must invalidate readers' caches.
+      refresh(spark, m.name)
+      // the audits ran on the STAGED files; a PARTITIONED rename is
+      // the one step that can lose them (partition metadata left at
+      // the old path — the class renameTable repairs). One limit-1
+      // probe, paid only for partitioned members, turns any residual
+      // silent-empty into a loud failure while __prev + marker still
+      // exist, so recoverSet rolls the whole set back. An
+      // unpartitioned rename moves the whole directory — no probe.
+      if (renamedPartitioned && cs.last == 0L)
+        require(!spark.table(m.name).isEmpty,
+          s"publish of ${m.name}: staged rows lost in the swap")
+      stepDone()
+    }
+    stepDone()
+    members.foreach(m => dropTable(spark, s"${m.name}__prev"))
+    dropTable(spark, markerOf(setName))
+    (true, results)
+  }
+
+  private def markerOf(setName: String) = s"${setName}__swapping"
+  private val MembersKey = "graft.publish.members"
+
+  /** Step 1 of [[publishSetAudited]]: create the set's marker table
+    * with the members' names, in publish order, as a table property —
+    * catalog metadata only, no data write — so [[recoverSet]] learns
+    * the in-flight set from the marker itself and publishes of
+    * different memberships may share one set name (one mutex). The
+    * atomic create-if-absent is the mutex: a held marker throws
+    * IllegalStateException. */
+  private[graft] def takeMarker(spark: SparkSession, setName: String,
+      names: Seq[String]): Unit = {
+    val marker = markerOf(setName)
     if (!spark.catalog.tableExists(marker))
       dropOrphanLocation(spark, marker)
-    try spark.sql(s"CREATE TABLE $marker (committed INT) USING parquet")
+    MetaOps.inc("create_marker")
+    try spark.sql(s"CREATE TABLE $marker (committed INT) USING parquet " +
+      s"TBLPROPERTIES ('$MembersKey' = '${names.mkString(",")}')")
     catch {
       case e: org.apache.spark.sql.catalyst.analysis
           .TableAlreadyExistsException =>
@@ -1089,88 +1089,42 @@ object Materialize {
             "either a concurrent publisher holds it or a prior crash " +
             "was never recovered (run recoverSet first)", e)
     }
-    tables.foreach { case (df, name, _, pc) =>
-      pc match {
-        case Some(c) => partitionedTable(df, s"${name}__staging", c)
-        case None => table(df, s"${name}__staging")
-      }
-    }
-    // ONE action audits every staged table's whole suite (the gate is
-    // the action-count hot spot of every composed build that publishes
-    // through it). A hidden NonEmpty leg per table rides the same
-    // union — zero extra jobs — feeding the post-swap guard below.
-    val counts = graft.quality.Quality.countsOnce(
-      tables.map { case (_, name, checks, _) =>
-        spark.table(s"${name}__staging") ->
-          (checks :+ graft.quality.NonEmpty()) })
-    val stagedNonEmpty = counts.map(_.last == 0L)
-    val results = tables.zip(counts).map {
-      case ((_, name, checks, _), cs) =>
-        name -> graft.quality.Quality.resultsOf(checks, cs.init,
-          warnAsError)
-    }
-    val ok = results.forall(_._2.forall(_.passed))
-    if (!ok) {
-      tables.foreach { case (_, name, _, _) =>
-        dropTable(spark, s"${name}__staging") }
-      spark.sql(s"DROP TABLE $marker")
-      return (false, results)
-    }
-    tables.zipWithIndex.foreach { case ((_, name, _, _), i) =>
-      val prev = s"${name}__prev"
-      dropTable(spark, s"$prev")
-      dropOrphanLocation(spark, prev)
-      if (spark.catalog.tableExists(name))
-        renameTable(spark, name, prev)
-      dropOrphanLocation(spark, name)
-      val renamedPartitioned =
-        renameTable(spark, s"${name}__staging", name)
-      refresh(spark, name) // the publish staleness class
-      // audits ran on the STAGED files; a PARTITIONED rename is the
-      // one step that can lose them (see publishAudited). One limit-1
-      // probe, paid only for partitioned members, fails while __prev +
-      // marker still exist so recoverSet rolls the whole set back.
-      if (renamedPartitioned && stagedNonEmpty(i))
-        require(!spark.table(name).isEmpty,
-          s"publish of $name: staged rows lost in the swap")
-      if (crashAfterSwap == i) throw new CrashInjected(i)
-    }
-    if (crashAfterSwap == tables.size)
-      throw new CrashInjected(tables.size)
-    tables.foreach { case (_, name, _, _) =>
-      dropTable(spark, s"${name}__prev") }
-    spark.sql(s"DROP TABLE $marker")
-    (true, results)
   }
 
   /** Crash repair for [[publishSetAudited]]: rolls the WHOLE set to
-    * one consistent generation. Marker absent → only staging debris
-    * is possible (pre-swap crash or clean completion): drop it.
-    * Marker present → if NO staging remains every table swapped:
-    * roll FORWARD (finish the cleanup); otherwise roll BACK — unswapped
-    * tables keep (or recover) their previous version and swapped
-    * tables have their new version dropped and the previous restored.
-    * Idempotent. Returns "forward", "back", or "noop". */
-  def recoverSet(spark: SparkSession, setName: String,
-      names: Seq[String]): String = {
-    val marker = s"${setName}__swapping"
+    * one consistent generation, over the members the held marker
+    * names. Marker absent → no publish is in flight: "noop" (a
+    * publish drops its stagings before it frees the marker). Marker
+    * present and no staging left → every member swapped (or none was
+    * staged yet): roll FORWARD, i.e. finish the cleanup. Otherwise
+    * roll BACK. Members swap only after ALL are staged, so while the
+    * LAST member has no staging the crash hit the staging phase and
+    * nothing swapped; once it has one, a member without staging has
+    * swapped — it gets its new version dropped and the previous one
+    * restored (or goes back to unpublished on a first release), and an
+    * unswapped member keeps (or gets back from `__prev`) its previous
+    * version. Idempotent once it has returned. Returns "forward",
+    * "back", or "noop". */
+  def recoverSet(spark: SparkSession, setName: String): String = {
+    val marker = markerOf(setName)
+    if (!spark.catalog.tableExists(marker)) return "noop"
+    val names = spark.sql(s"SHOW TBLPROPERTIES $marker").collect()
+      .collectFirst { case r if r.getString(0) == MembersKey =>
+        r.getString(1).split(",").toSeq }
+      .getOrElse(throw new IllegalStateException(
+        s"marker $marker names no members"))
     def staging(n: String) = s"${n}__staging"
     def prev(n: String) = s"${n}__prev"
-    if (!spark.catalog.tableExists(marker)) {
-      val any = names.exists(n => spark.catalog.tableExists(staging(n)))
-      names.foreach(n =>
-        dropTable(spark, s"${staging(n)}"))
-      return if (any) "back" else "noop"
-    }
-    val anyStaging = names.exists(n =>
-      spark.catalog.tableExists(staging(n)))
-    if (!anyStaging) {
-      names.foreach(n => dropTable(spark, s"${prev(n)}"))
-      dropTable(spark, s"$marker")
+    val staged = names.filter(n => spark.catalog.tableExists(staging(n)))
+      .toSet
+    if (staged.isEmpty) {
+      names.foreach(n => dropTable(spark, prev(n)))
+      dropTable(spark, marker)
       "forward"
     } else {
+      val swapping = staged(names.last)
       names.foreach { n =>
-        if (spark.catalog.tableExists(staging(n))) {
+        if (staged(n)) {
           // not yet swapped: the previous version either still holds
           // the name or sits aside as __prev (crash between renames)
           if (!spark.catalog.tableExists(n) &&
@@ -1178,11 +1132,11 @@ object Materialize {
             dropOrphanLocation(spark, n)
             renameTable(spark, prev(n), n)
           }
-          dropTable(spark, s"${staging(n)}")
-        } else {
+          dropTable(spark, staging(n))
+        } else if (swapping) {
           // swapped: the name holds the NEW version — roll it back to
           // the kept prev (or to unpublished for a first release)
-          dropTable(spark, s"$n")
+          dropTable(spark, n)
           dropOrphanLocation(spark, n)
           if (spark.catalog.tableExists(prev(n)))
             renameTable(spark, prev(n), n)
@@ -1190,7 +1144,7 @@ object Materialize {
         if (spark.catalog.tableExists(n))
           refresh(spark, n) // publish staleness class
       }
-      dropTable(spark, s"$marker")
+      dropTable(spark, marker)
       "back"
     }
   }

@@ -266,9 +266,9 @@ object WarehouseBuild {
       .agg(sum(col("revenue")).cast("decimal(18,2)").as("revenue"))
     val (martsOk, martsAudit) = Materialize.publishSetAudited(
       s"e2e_marts_$h", Seq(
-        (monthly, s"e2e_mart_monthly_$h",
+        Materialize.Member(monthly, s"e2e_mart_monthly_$h",
           Seq(NotNull("month"), NotNull("revenue"), Unique(Seq("month")))),
-        (segment, s"e2e_mart_segment_$h",
+        Materialize.Member(segment, s"e2e_mart_segment_$h",
           Seq(NotNull("c_mktsegment"), Unique(Seq("c_mktsegment"))))))
     // read back from the catalog: the report describes the PUBLISHED
     // artifact (cents stay exact: decimal × 100 → long). On the

@@ -276,16 +276,15 @@ class AnnIndexSpec extends SparkSpec {
     val postFrozen = postings(name)
     // crash after the CENTROIDS renamed in but before the postings:
     // the worst state — new centroids over old cell assignments
+    // (centroids are member 0 of the two-member set)
     intercept[Materialize.CrashInjected] {
       AnnIndex.maintainWithRetrain(spark, name, q, "query_id", "qvec",
-        k, cells, dims, iters, threshold = 0.02, crashAfterSwap = 0)
+        k, cells, dims, iters, threshold = 0.02,
+        crashAfter = PublishSteps.renamedIn(0, 2))
     }
-    val setTables = Seq(AnnIndex.centroidsTable(name),
-      AnnIndex.postingsTable(name))
     assert(spark.catalog.tableExists(s"${name}_retrain__swapping"))
     // recovery rolls the whole set back to the frozen generation...
-    assert(Materialize.recoverSet(spark, s"${name}_retrain",
-      setTables) == "back")
+    assert(Materialize.recoverSet(spark, s"${name}_retrain") == "back")
     assert(centFp() == fpFrozen && postings(name) == postFrozen)
     // ...the index serves (centroids and postings are consistent)
     assert(rows(AnnIndex.topK(spark, name, q, "query_id", "qvec", k))

@@ -98,59 +98,82 @@ class MaterializeSpec extends SparkSpec {
     spark.sql("DROP TABLE mz_cmp")
   }
 
-  test("publishAudited: passing audit swaps, failing audit rejects") {
-    import graft.quality.NotNull
-    spark.sql("DROP TABLE IF EXISTS mz_wap")
-    spark.sql("DROP TABLE IF EXISTS mz_wap__staging")
+  /** A single table publishes as a one-member set named after it. */
+  private def publish(df: org.apache.spark.sql.DataFrame, name: String,
+      crashAfter: Int = -1)
+      : (Boolean, Seq[graft.quality.Quality.Result]) = {
+    val (ok, r) = Materialize.publishSetAudited(name,
+      Seq(Materialize.Member(df, name, Seq(graft.quality.NotNull("v")))),
+      crashAfter = crashAfter)
+    (ok, r.head._2)
+  }
+
+  private def dropPublishState(name: String): Unit =
+    Seq(name, s"${name}__staging", s"${name}__prev", s"${name}__swapping")
+      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+
+  test("one-member publish set: passing audit swaps, failing audit " +
+      "rejects") {
+    dropPublishState("mz_wap")
     val v1 = Seq((1, "a"), (2, "b")).toDF("id", "v")
-    val (ok1, r1) = Materialize.publishAudited(v1, "mz_wap",
-      Seq(NotNull("v")))
+    val (ok1, r1) = publish(v1, "mz_wap")
     assert(ok1 && r1.head.status == "pass")
     assert(rows(spark.table("mz_wap")).map(_.getInt(0)).sorted == Seq(1, 2))
     // poisoned v2: audit fails, published table must stay at v1
     val v2 = Seq((3, null.asInstanceOf[String])).toDF("id", "v")
-    val (ok2, r2) = Materialize.publishAudited(v2, "mz_wap",
-      Seq(NotNull("v")))
+    val (ok2, r2) = publish(v2, "mz_wap")
     assert(!ok2 && r2.head.status == "error" && r2.head.violations == 1)
     assert(rows(spark.table("mz_wap")).map(_.getInt(0)).sorted == Seq(1, 2))
-    // staging never lingers, in either outcome
+    // staging never lingers, in either outcome, and the marker is freed
     assert(!spark.catalog.tableExists("mz_wap__staging"))
+    assert(!spark.catalog.tableExists("mz_wap__swapping"))
     // a clean v3 replaces v1 (repeatable lifecycle)
     val v3 = Seq((9, "z")).toDF("id", "v")
-    val (ok3, _) = Materialize.publishAudited(v3, "mz_wap",
-      Seq(NotNull("v")))
+    val (ok3, _) = publish(v3, "mz_wap")
     assert(ok3 && rows(spark.table("mz_wap")).map(_.getInt(0)) == Seq(9))
     spark.sql("DROP TABLE mz_wap")
   }
 
   test("publish crash windows: a reader always sees a complete version") {
-    import graft.quality.NotNull
     def ids(n: String) = rows(spark.table(n)).map(_.getInt(0)).sorted
-    Seq("mz_cw", "mz_cw__staging", "mz_cw__prev")
-      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+    // each window is a state the set protocol reaches mid-publish, so
+    // the marker is held in all of them
+    def holdMarker(): Unit =
+      Materialize.takeMarker(spark, "mz_cw", Seq("mz_cw"))
+    def recover() = Materialize.recoverSet(spark, "mz_cw")
+    dropPublishState("mz_cw")
     val v1 = Seq((1, "a")).toDF("id", "v")
     val v2 = Seq((2, "b")).toDF("id", "v")
-    assert(Materialize.publishAudited(v1, "mz_cw", Seq(NotNull("v")))._1)
+    val v3 = Seq((3, "c")).toDF("id", "v")
+    assert(publish(v1, "mz_cw")._1)
     // crash window 1: staged, no rename yet — old version serves,
-    // recoverPrev is a no-op, and a retry completes cleanly
+    // recovery restores nothing (it only drops the staging), and a
+    // retry completes cleanly
+    holdMarker()
     Materialize.table(v2, "mz_cw__staging")
     assert(ids("mz_cw") == Seq(1))
-    assert(!Materialize.recoverPrev(spark, "mz_cw"))
-    assert(Materialize.publishAudited(v2, "mz_cw", Seq(NotNull("v")))._1)
+    assert(recover() == "back")
+    assert(ids("mz_cw") == Seq(1))
+    assert(publish(v2, "mz_cw")._1)
     assert(ids("mz_cw") == Seq(2))
     // crash window 2: rename-aside done, rename-in not — the one gap
-    // state; recoverPrev restores the COMPLETE previous version
+    // state; recovery restores the COMPLETE previous version
+    holdMarker()
+    Materialize.table(v3, "mz_cw__staging")
     spark.sql("ALTER TABLE mz_cw RENAME TO mz_cw__prev")
     assert(!spark.catalog.tableExists("mz_cw"))
-    assert(Materialize.recoverPrev(spark, "mz_cw"))
+    assert(recover() == "back")
     assert(ids("mz_cw") == Seq(2))
-    assert(!Materialize.recoverPrev(spark, "mz_cw")) // idempotent
+    assert(recover() == "noop") // idempotent
     // crash window 3: renamed in, prev not dropped — readers see the
-    // new version and the NEXT publish clears the leftover
+    // new version; the held marker refuses the next publish until
+    // recovery rolls forward, which clears the leftover
+    holdMarker()
     Materialize.table(v1, "mz_cw__prev")
     assert(ids("mz_cw") == Seq(2))
-    val v3 = Seq((3, "c")).toDF("id", "v")
-    assert(Materialize.publishAudited(v3, "mz_cw", Seq(NotNull("v")))._1)
+    intercept[IllegalStateException](publish(v3, "mz_cw"))
+    assert(recover() == "forward")
+    assert(publish(v3, "mz_cw")._1)
     assert(ids("mz_cw") == Seq(3))
     assert(!spark.catalog.tableExists("mz_cw__prev"))
     spark.sql("DROP TABLE mz_cw")
@@ -158,36 +181,37 @@ class MaterializeSpec extends SparkSpec {
 
   test("publish crash injection: every mid-swap crash leaves a " +
       "recoverable complete version") {
-    import graft.quality.NotNull
     def ids(n: String) = rows(spark.table(n)).map(_.getInt(0)).sorted
     val name = "mz_ci"
     // Unlike the hand-built crash-window test above, this drives the
     // REAL publish path and kills it after each step of its actual
     // sequence — so a reordering of the swap ops is caught here even
     // if every hand-modeled window still passes.
-    for (k <- 0 to 4) {
-      Seq(name, s"${name}__staging", s"${name}__prev")
-        .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+    for (k <- 0 until PublishSteps.count(1)) {
+      dropPublishState(name)
       val v1 = Seq((1, "a")).toDF("id", "v")
       val v2 = Seq((2, "b")).toDF("id", "v")
-      assert(Materialize.publishAudited(v1, name, Seq(NotNull("v")))._1)
+      assert(publish(v1, name)._1)
       intercept[Materialize.CrashInjected] {
-        Materialize.publishAudited(v2, name, Seq(NotNull("v")),
-          crashAfterStep = k)
+        publish(v2, name, crashAfter = k)
       }
       // repair, then the invariant: the published name resolves to a
       // COMPLETE version — all of v1 or all of v2, never a mix/empty
-      Materialize.recoverPrev(spark, name)
+      assert(Materialize.recoverSet(spark, name) != "noop",
+        s"step $k: nothing to recover")
       assert(spark.catalog.tableExists(name), s"step $k: published name lost")
       val got = ids(name)
       assert(got == Seq(1) || got == Seq(2), s"step $k: partial state $got")
+      // no debris, and a second recovery is a no-op
+      Seq("__staging", "__prev", "__swapping").foreach(sfx =>
+        assert(!spark.catalog.tableExists(name + sfx), s"step $k: $sfx"))
+      assert(Materialize.recoverSet(spark, name) == "noop",
+        s"step $k: recovery not idempotent")
       // and a clean retry always lands v2, leftovers notwithstanding
-      assert(Materialize.publishAudited(v2, name, Seq(NotNull("v")))._1,
-        s"step $k: retry failed")
+      assert(publish(v2, name)._1, s"step $k: retry failed")
       assert(ids(name) == Seq(2), s"step $k: retry content")
     }
-    Seq(name, s"${name}__staging", s"${name}__prev")
-      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+    dropPublishState(name)
   }
 
   test("tableIncremental merges only touched partitions, deduped at rest") {
@@ -537,6 +561,35 @@ class MaterializeSpec extends SparkSpec {
       frame(Seq(("d2", "k1", 4L))), Seq("d", "k"), "d", "b004")
     assert(agg(recheck) == Set(("d1", "k1", 35L), ("d2", "k1", 7L)))
     Materialize.dropAggState(spark, n)
+  }
+
+  test("a fold commit that loses the manifest race leaves the " +
+      "winner's generation files untouched") {
+    import graft.sources.CkptStore
+    val t = "mz_ckpt_race"
+    CkptStore.delete(spark, t)
+    var winner: CkptStore.Manifest = null
+    // the second commit runs INSIDE the first one's data write: both
+    // read the same next sequence, the nested one lands its files and
+    // wins the manifest rename, and only then does the outer one
+    // write its own files
+    val e = intercept[IllegalStateException] {
+      CkptStore.commit(spark, t, "b001") { dir =>
+        winner = CkptStore.commit(spark, t, "b002") { d =>
+          Seq(("winner", 2L)).toDF("who", "v")
+            .write.mode("overwrite").parquet(d)
+        }
+        Seq(("loser", 1L)).toDF("who", "v")
+          .write.mode("overwrite").parquet(dir)
+      }
+    }
+    assert(e.getMessage.contains("lost the rename race"))
+    assert(CkptStore.current(spark, t).contains(winner))
+    val served = spark.read
+      .parquet(CkptStore.genPath(spark, t, winner.dir).toString)
+    assert(rows(served).map(r => (r.getString(0), r.getLong(1))) ==
+      Seq(("winner", 2L)))
+    CkptStore.delete(spark, t)
   }
 
   test("compact reconciles cross-partition movers to full-rebuild dedup") {

@@ -10,8 +10,9 @@ import graft.operators.Par
 /** The concurrency contract the composed builds' overlapped writes
   * rely on (guide §2.6 wiring, r14): every branch runs, every branch
   * is joined before return, a failure surfaces AFTER all branches
-  * finish (no abandoned in-flight write), and each branch sees the
-  * session active on its own thread. */
+  * finish (no abandoned in-flight write) with every sibling failure
+  * attached, and each branch sees the session active on its own
+  * thread. */
 class ParSpec extends AnyFunSuite {
 
   private lazy val spark = SparkSession.builder()
@@ -40,6 +41,18 @@ class ParSpec extends AnyFunSuite {
     assert(e.getMessage == "boom")
     // the sibling branch was NOT abandoned mid-flight
     assert(finished.get() == 1)
+  }
+
+  test("every sibling failure rides the rethrown one as suppressed") {
+    val e = intercept[RuntimeException] {
+      Par.run(spark)(
+        () => throw new RuntimeException("a"),
+        () => throw new RuntimeException("b"),
+        () => ())
+    }
+    assert(e.getSuppressed.length == 1)
+    assert((e +: e.getSuppressed.toSeq).map(_.getMessage).toSet ==
+      Set("a", "b"))
   }
 
   test("each branch sees the session active on its own thread") {
