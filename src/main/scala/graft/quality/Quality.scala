@@ -224,9 +224,12 @@ object Quality {
     * when the observed subtree turns out empty at runtime,
     * `AQEPropagateEmptyRelation` replaces it with an empty relation
     * and the `CollectMetrics` node is PRUNED — the metrics map comes
-    * back empty. That can only happen when the true metric is the
-    * aggregate of zero rows, so the zero-value default is exact, not
-    * a guess. */
+    * back empty. For a node whose rows all reach the empty subtree the
+    * true metric is the aggregate of zero rows, so the zero-value
+    * default is exact, not a guess; a node below a filter or anti-join
+    * that emptied the rows can be pruned with rows behind it, and its
+    * reader must recount (see `CorpusBuild.runIncremental`'s gate
+    * counters). */
   def obsLong(o: org.apache.spark.sql.Observation, k: String): Long =
     o.get.get(k).map(_.asInstanceOf[Number].longValue()).getOrElse(0L)
 

@@ -64,8 +64,22 @@ object CorpusBuild {
     sys.props.get("graft.corpus.partSpan").map(_.toLong)
       .getOrElse(CuratedPartSpan)
 
-  private def ptCol = floor(col("doc_id") / lit(curatedPartSpan))
+  private def ptCol = ptOf(curatedPartSpan)
+
+  private def ptOf(span: Long) = floor(col("doc_id") / lit(span))
     .cast("long").as("pt")
+
+  /** The `pt` column of an EXISTING corpus whose curated table is
+    * `curatedT`: over the span [[run]] recorded on that table as a
+    * property (catalog metadata, no data action), so a delta or an
+    * erasure addresses the slices the tables were built with, whatever
+    * span is in force now; a table without the property takes the
+    * span in force. */
+  private def builtPtCol(spark: SparkSession, curatedT: String) =
+    ptOf(org.apache.spark.sql.graft.CatalogMeta.of(spark, curatedT)
+      .properties.get(SpanKey).map(_.toLong).getOrElse(curatedPartSpan))
+
+  private val SpanKey = "graft.corpus.partSpan"
 
   private type Metric = (String, String, String, Long)
 
@@ -215,6 +229,9 @@ object CorpusBuild {
             .withColumn("pt", ptCol)
             .observe(curObs, count(lit(1)).as("rows_final")),
           s"e2e_corpus_curated_$h", "pt")
+        graft.sources.MetaOps.inc("set_properties")
+        spark.sql(s"ALTER TABLE e2e_corpus_curated_$h SET TBLPROPERTIES " +
+          s"('$SpanKey' = '$curatedPartSpan')")
       })
     val rowsFinal = Quality.obsLong(curObs, "rows_final")
 
@@ -223,6 +240,7 @@ object CorpusBuild {
     // its own table — overlapped.
     var publishOk = false
     var audit: Seq[graft.quality.Quality.Result] = Seq.empty
+    val (manifest, _) = repackManifest(spark, h)
     graft.operators.Par.run(spark)(
       // the decontamination gram INDEX (gh = md5Long(gram), doc_id
       // over the curated corpus): makes the incremental path's
@@ -260,19 +278,8 @@ object CorpusBuild {
       // starts in the shard its prefix lands in), published through
       // the WAP audit gate
       () => {
-        val packed = Ranking.withRunningTotal(
-          curated.select(col("doc_id"), col("tok")),
-          col("doc_id").asc, col("tok"), "prev")
-        val manifest = packed
-          .groupBy(floor(col("prev") / lit(ShardBudget.toDouble))
-            .cast("long").as("shard"))
-          .agg(count(lit(1)).as("n_docs"),
-            sum(col("tok")).cast("long").as("shard_tokens"),
-            min(col("doc_id")).as("first_doc"),
-            max(col("doc_id")).as("last_doc"))
-        val (ok, a) = Materialize.publishSetAudited(corpusSet(h), Seq(
-          Materialize.Member(manifest, s"e2e_corpus_manifest_$h",
-            ManifestChecks)))
+        val (ok, a) =
+          Materialize.publishSetAudited(corpusSet(h), Seq(manifest))
         publishOk = ok; audit = a.flatMap(_._2)
       })
 
@@ -361,21 +368,20 @@ object CorpusBuild {
     val gramsT = s"e2e_corpus_grams_$h"
     val bandsT = s"e2e_corpus_bands_$h"
     val removedT = s"e2e_corpus_removed_$h"
-    require(spark.catalog.tableExists(curatedT) &&
-      spark.catalog.tableExists(probesT) &&
-      spark.catalog.tableExists(gramsT) &&
-      spark.catalog.tableExists(bandsT) &&
-      spark.catalog.tableExists(removedT),
+    require(Seq(curatedT, probesT, gramsT, bandsT, removedT)
+      .forall(spark.catalog.tableExists(_)),
       s"runIncremental continues a prior run: $curatedT/$probesT/" +
         s"$gramsT/$bandsT/$removedT missing")
+    val ptCol = builtPtCol(spark, curatedT)
 
     // ---- delta gates ride one scan, counters via observe (the same
     // instrumentation contract as the full build)
-    val (observed, gateObs) = Quality.observed(enrich(delta), Seq(
+    val gateChecks = Seq(
       "rows_in" -> lit(true),
       "dropped_low_quality" -> (col("score") < QualityMin),
       "dropped_non_en" ->
-        (col("score") >= QualityMin && col("predicted") =!= "en")))
+        (col("score") >= QualityMin && col("predicted") =!= "en"))
+    val (observed, gateObs) = Quality.observed(enrich(delta), gateChecks)
     val gated = observed
       .filter(col("score") >= QualityMin && col("predicted") === "en")
 
@@ -603,27 +609,13 @@ object CorpusBuild {
     // bounded collect: <= delta-partition + removal-partition VALUES
     if (touched.nonEmpty) {
       val cols = spark.table(curatedT).columns.toSeq // pt last
-      val merged = spark.table(curatedT)
-        .filter(col("pt").isin(touched: _*))
-        .join(contamOld, Seq("doc_id"), "left_anti")
-        .select(cols.map(col): _*)
-        .unionByName(addKept.select(cols.map(col): _*))
-      // a partition erased to zero rows must be dropped explicitly —
-      // dynamic overwrite only rewrites partitions PRESENT in the
-      // output (the eraseKeys contract)
-      val keptParts = merged.select(col("pt")).distinct()
-        .collect().map(_.getLong(0)).toSet // bounded: <= touched
-      val PoKey = "spark.sql.sources.partitionOverwriteMode"
-      val prev = spark.conf.getOption(PoKey)
-      spark.conf.set(PoKey, "dynamic")
-      try merged.repartition(col("pt"))
-        .write.mode("overwrite").insertInto(curatedT)
-      finally prev match {
-        case Some(v) => spark.conf.set(PoKey, v)
-        case None => spark.conf.unset(PoKey)
-      }
-      Materialize.dropPartitions(spark, curatedT,
-        touched.filterNot(keptParts.contains).map(v => Seq("pt" -> v)))
+      Materialize.overwritePartitions(spark, curatedT,
+        spark.table(curatedT)
+          .filter(col("pt").isin(touched: _*))
+          .join(contamOld, Seq("doc_id"), "left_anti")
+          .select(cols.map(col): _*)
+          .unionByName(addKept.select(cols.map(col): _*)),
+        Seq("pt"), touched.map(Seq(_)))
       Materialize.refresh(spark, curatedT)
     }
     // gram-index append ∥ manifest republish (guide §2.6): the gram
@@ -662,12 +654,25 @@ object CorpusBuild {
     // then prunes the CollectMetrics nodes, and a strict o.get(k) dies
     // with "key not found" — found live as the 538/539 r12 flake
     val kept = Quality.obsLong(dedupObs, "rows_kept")
+    // the gate counters sit BELOW the dedup stages: when those come out
+    // empty (an all-duplicate delta), AQE can prune the observe node
+    // although the delta itself was not empty, so a pruned gate
+    // observation is recounted by one aggregate over the delta
+    val gate: Map[String, Long] =
+      if (gateObs.get.nonEmpty)
+        gateChecks.map { case (k, _) => k -> Quality.obsLong(gateObs, k) }
+          .toMap
+      else {
+        val sums = gateChecks.map { case (k, bad) =>
+          coalesce(sum(when(bad, 1L).otherwise(0L)), lit(0L)).as(k) }
+        val r = enrich(delta).agg(sums.head, sums.tail: _*).head()
+        gateChecks.map { case (k, _) => k -> r.getAs[Long](k) }.toMap
+      }
     val report: Seq[Metric] = Seq[Metric](
-      ("quality", "delta", "rows_in", Quality.obsLong(gateObs, "rows_in")),
+      ("quality", "delta", "rows_in", gate("rows_in")),
       ("quality", "delta", "dropped_low_quality",
-        Quality.obsLong(gateObs, "dropped_low_quality")),
-      ("langid", "delta", "dropped_non_en",
-        Quality.obsLong(gateObs, "dropped_non_en")),
+        gate("dropped_low_quality")),
+      ("langid", "delta", "dropped_non_en", gate("dropped_non_en")),
       ("dedup", "delta", "rows_kept", kept),
       ("dedup", "delta", "near_dup_removed", kept - rowsStaged),
       ("decontam", "delta", "eval_docs_added", evalAdded),
@@ -702,8 +707,9 @@ object CorpusBuild {
   /** The shard manifest repacked from the current curated table, as a
     * publish-set member for the caller to release, plus the
     * observation its staging write fills with the curated row count
-    * (`rows_final`). Shared by [[runIncremental]] and [[eraseDocs]] so
-    * the manifest contract cannot drift between the lifecycle paths. */
+    * (`rows_final`). Shared by [[run]], [[runIncremental]] and
+    * [[eraseDocs]] so the manifest contract cannot drift between the
+    * lifecycle paths. */
   private def repackManifest(spark: SparkSession, h: String)
       : (Materialize.Member, org.apache.spark.sql.Observation) = {
     val packed = Ranking.withRunningTotal(
@@ -753,15 +759,28 @@ object CorpusBuild {
     * copyright-opt-out takedown — the lifecycle step after [[run]] /
     * [[runIncremental]]): every trace of the requested `doc_id`s is
     * physically deleted from every published artifact — the curated
-    * corpus and the decontamination gram index (both partition-scoped
-    * rewrites of ONLY the touched `pt` slices via
-    * [[Materialize.eraseKeys]]; the rest of a 100 TB corpus is never
-    * read or written) — then the eval probe set and the repacked
-    * shard manifest republish as ONE audited set, so no published
-    * artifact references an erased doc and a failed audit leaves
-    * neither half-erased. Returns the audit report a DPO wants:
-    * rows deleted per artifact, partitions rewritten, and the
-    * republished-manifest state.
+    * corpus, the decontamination gram index, the band fingerprints and
+    * the removed archive (partition-scoped rewrites, via
+    * [[Materialize.eraseKeysIn]], of ONLY the request's `pt` slices
+    * that hold one of its docs; the rest of a 100 TB corpus is never
+    * read or written) — then the eval probe set and the repacked shard
+    * manifest republish as ONE audited set, so no published artifact
+    * references an erased doc and a failed audit leaves neither
+    * half-erased. Returns the audit report a DPO wants: rows deleted
+    * per artifact, partitions rewritten, and the republished-manifest
+    * state.
+    *
+    * One pass, no discovery action: all four tables are partitioned by
+    * the same `pt` of `doc_id` (over the span recorded on the curated
+    * table at build time), so the request's own `pt` values are the
+    * candidate slices; each table erases in ONE write action that
+    * rewrites only the candidates holding a requested doc (a replayed
+    * request writes none), and every count the report needs rides
+    * that write (observe metrics: rows erased, the slices that held
+    * one, the slices left non-empty) — the probe count rides the probe
+    * member's staging write, so the probe set republishes on every
+    * request. The publish starts as soon as the curated rewrite lands,
+    * overlapped with the other three.
     *
     * Contract notes (spec-pinned):
     *  - erasure FORGETS, it does not replay history: a duplicate that
@@ -773,9 +792,9 @@ object CorpusBuild {
     *    semantics, not drift.
     *  - replay-safe: erasing the same ids twice is a content no-op
     *    (second report shows zero deletions).
-    *  - `eraseIds` is a bounded request list (broadcast through every
-    *    use), and the only driver-side values are the report's Longs
-    *    plus the touched partition VALUES. */
+    *  - `eraseIds` is a bounded request list, collected once and
+    *    broadcast through every use; the other driver-side values are
+    *    the report's Longs and the request's partition VALUES. */
   def eraseDocs(spark: SparkSession, dir: String,
       eraseIds: DataFrame): DataFrame = {
     val h = math.abs(dir.hashCode).toString
@@ -784,104 +803,93 @@ object CorpusBuild {
     val gramsT = s"e2e_corpus_grams_$h"
     val bandsT = s"e2e_corpus_bands_$h"
     val removedT = s"e2e_corpus_removed_$h"
-    require(spark.catalog.tableExists(curatedT) &&
-      spark.catalog.tableExists(probesT) &&
-      spark.catalog.tableExists(gramsT) &&
-      spark.catalog.tableExists(bandsT) &&
-      spark.catalog.tableExists(removedT),
+    require(Seq(curatedT, probesT, gramsT, bandsT, removedT)
+      .forall(spark.catalog.tableExists(_)),
       s"eraseDocs amends a prior run: $curatedT/$probesT/$gramsT/" +
         s"$bandsT/$removedT missing")
-    val ids = eraseIds
+    // the request, collected ONCE with each id's partition (bounded: a
+    // broadcast collects it to the driver anyway): every later join
+    // broadcasts this local copy instead of re-running the request's
+    // plan, and the request's partitions are the candidate slices
+    val req = eraseIds
       .select(col(eraseIds.columns.head).cast("long").as("doc_id"))
-      .distinct()
-
-    // audit counts AND affected-partition lists BEFORE deletion, all
-    // five artifacts in one collected union — ONE discovery action
-    // (each collect_set is bounded: the touched partition VALUES of a
-    // bounded erasure request, the tableIncremental contract)
-    val inCurated = spark.table(curatedT)
-      .join(broadcast(ids), Seq("doc_id"), "left_semi")
-    def leg(name: String, v: DataFrame, withPts: Boolean) =
-      v.agg(count(lit(1)).cast("long").as("value"),
-        (if (withPts) collect_set(col("pt"))
-         else array().cast("array<bigint>")).as("pts"))
-        .select(lit(name).as("metric"), col("value"), col("pts"))
-    val pre = leg("curated", inCurated, withPts = true)
-      .unionByName(leg("grams", spark.table(gramsT)
-        .join(broadcast(ids), Seq("doc_id"), "left_semi"), withPts = true))
-      .unionByName(leg("probes", spark.table(probesT)
-        .join(broadcast(ids), Seq("doc_id"), "left_semi"), withPts = false))
-      .unionByName(leg("bands", spark.table(bandsT)
-        .join(broadcast(ids), Seq("doc_id"), "left_semi"), withPts = true))
-      .unionByName(leg("removed", spark.table(removedT)
-        .join(broadcast(ids), Seq("doc_id"), "left_semi"), withPts = true))
-      .collect()
-      .map(r => r.getString(0) -> ((r.getLong(1), r.getSeq[Long](2))))
-      .toMap
-    val nCurated = pre("curated")._1
-    val nParts = pre("curated")._2.size.toLong
-    val nGrams = pre("grams")._1
-    val nProbes = pre("probes")._1
-    val nBands = pre("bands")._1
-    val nRemoved = pre("removed")._1
+      .filter(col("doc_id").isNotNull)
+      .select(col("doc_id"), builtPtCol(spark, curatedT)).collect()
+    val ids = {
+      import spark.implicits._
+      req.map(_.getLong(0)).distinct.toSeq.toDF("doc_id")
+    }
+    val candidates: Seq[Any] = req.map(_.get(1)).distinct.toSeq
 
     // partition-scoped physical deletes — band rows and the removed
     // archive carry content FINGERPRINTS and text, so erasure must
     // reach them too (a stale band entry would merely stop verifying,
     // but the right to erasure is about the bytes, not the behavior).
-    // STAGED-PARALLEL, one commit discipline (the r12 scale finding:
-    // four serial rewrite chains were pure driver-side metadata
-    // latency): the four artifacts are four DIFFERENT tables — each
-    // write has its own committer staging dir (contrast
-    // checkpointPartials' same-table serial loop), so the distributed
-    // rewrites run CONCURRENTLY and each table's emptied slices drop
-    // in ONE batched ALTER. The outer dynamic-overwrite wrap pins the
-    // session conf for the whole block — the per-thread restores
-    // inside eraseKeysIn then always restore to "dynamic", so no
-    // thread can yank the mode out from under a sibling's in-flight
-    // write.
+    // The four artifacts are four DIFFERENT tables — each write has
+    // its own committer staging dir (contrast checkpointPartials'
+    // same-table serial loop), so the rewrites run CONCURRENTLY and
+    // each table's emptied slices drop in ONE batched ALTER. The outer
+    // dynamic-overwrite wrap pins the session conf for the whole block
+    // — the per-thread restores inside eraseKeysIn then always restore
+    // to "dynamic", so no thread can yank the mode out from under a
+    // sibling's in-flight write.
+    //
+    // The probe set (corpus-bounded-small: 1/DcProbeEvery of the docs)
+    // and the manifest repacked from the erased curated table release
+    // as ONE set — a failed audit on either leaves neither half-erased
+    // — in the curated branch, as soon as its rewrite lands, overlapped
+    // with the other three rewrites (it reads none of them; a failure
+    // anywhere fails the call, and a replay converges). rows_final
+    // rides the manifest repack's curated scan, the probe erasure
+    // count the probe staging write.
+    val tables = Seq(curatedT, gramsT, bandsT, removedT)
+    val erased = new Array[(Long, Seq[Any])](tables.size)
+    def erase(i: Int): Unit = erased(i) =
+      Materialize.eraseKeysIn(spark, tables(i), "doc_id", ids, "pt",
+        candidates)
+    val probeObs = org.apache.spark.sql.Observation()
+    val probes = Materialize.Member(
+      spark.table(probesT)
+        .join(broadcast(ids.withColumn("__erased", lit(true))),
+          Seq("doc_id"), "left")
+        .observe(probeObs, count(col("__erased")).as("erased"))
+        .filter(col("__erased").isNull).drop("__erased"),
+      probesT, ProbeChecks)
+    var published: Seq[Metric] = Nil // the publish branch's report rows
     Materialize.withDynamicOverwrite(spark) {
-      graft.operators.Par.run(spark)(Seq(
-        curatedT -> pre("curated")._2, gramsT -> pre("grams")._2,
-        bandsT -> pre("bands")._2, removedT -> pre("removed")._2)
-        .map { case (t, pts) => () =>
-          Materialize.eraseKeysIn(spark, t, "doc_id", ids, "pt", pts)
-        }: _*)
+      graft.operators.Par.run(spark)(
+        () => {
+          erase(0)
+          // drop operator-internal persisted frames and only then build
+          // the repack, so it never reads a pre-rewrite file listing
+          graft.operators.InternalCache.release()
+          val (manifest, rowsObs) = repackManifest(spark, h)
+          val (ok, r) = Materialize.publishSetAudited(corpusSet(h),
+            Seq(probes, manifest))
+          val m = manifestReadBack(spark, h)
+          published = Seq[Metric](
+            ("corpus", "curated", "rows_final",
+              Quality.obsLong(rowsObs, "rows_final")),
+            ("shards", "manifest", "n_shards", m.getAs[Long]("n_shards")),
+            ("shards", "manifest", "total_tokens",
+              m.getAs[Long]("total_tokens")),
+            ("shards", "manifest", "max_shard_tokens",
+              m.getAs[Long]("max_shard_tokens")),
+            ("shards", "manifest", "published", if (ok) 1L else 0L),
+            ("shards", "manifest", "audit_violations",
+              r.flatMap(_._2).map(_.violations).sum))
+        },
+        () => erase(1), () => erase(2), () => erase(3))
     }
-    // drop operator-internal persisted frames before the manifest
-    // repack, so nothing downstream reads a pre-rewrite file listing
-    graft.operators.InternalCache.release()
-
-    // the probe set (corpus-bounded-small: 1/DcProbeEvery of the docs)
-    // and the repacked manifest release as ONE set: a failed audit on
-    // either leaves neither half-erased. rows_final rides the manifest
-    // repack's curated scan.
-    val (manifest, rowsObs) = repackManifest(spark, h)
-    val probes =
-      if (nProbes == 0L) Nil
-      else Seq(Materialize.Member(
-        spark.table(probesT)
-          .join(broadcast(ids), Seq("doc_id"), "left_anti"),
-        probesT, ProbeChecks))
-    val (published, results) =
-      Materialize.publishSetAudited(corpusSet(h), probes :+ manifest)
-    val m = manifestReadBack(spark, h)
-    val rowsFinal = Quality.obsLong(rowsObs, "rows_final")
+    val Seq((nCurated, curatedHit), (nGrams, _), (nBands, _),
+      (nRemoved, _)) = erased.toSeq
     val report: Seq[Metric] = Seq[Metric](
       ("erase", "curated", "docs_erased", nCurated),
-      ("erase", "curated", "partitions_rewritten", nParts),
+      ("erase", "curated", "partitions_rewritten", curatedHit.size.toLong),
       ("erase", "grams", "rows_erased", nGrams),
-      ("erase", "probes", "docs_erased", nProbes),
+      ("erase", "probes", "docs_erased", Quality.obsLong(probeObs, "erased")),
       ("erase", "bands", "rows_erased", nBands),
-      ("erase", "removed", "docs_erased", nRemoved),
-      ("corpus", "curated", "rows_final", rowsFinal),
-      ("shards", "manifest", "n_shards", m.getAs[Long]("n_shards")),
-      ("shards", "manifest", "total_tokens", m.getAs[Long]("total_tokens")),
-      ("shards", "manifest", "max_shard_tokens",
-        m.getAs[Long]("max_shard_tokens")),
-      ("shards", "manifest", "published", if (published) 1L else 0L),
-      ("shards", "manifest", "audit_violations",
-        results.flatMap(_._2).map(_.violations).sum))
+      ("erase", "removed", "docs_erased", nRemoved)) ++ published
     graft.operators.InternalCache.release()
     import spark.implicits._
     report.toDF("step", "relation", "metric", "value")
@@ -940,7 +948,11 @@ object CorpusBuild {
     * prefix-sum packing, WAP publish) is hash-checked end to end. */
   /** The oracle CTE chain shared by q245 and q246: raw documents →
     * gates → keep-first dedup → corpus → probe/corpus gram sets →
-    * contamination → `fin` (the curated set) → shard packing. */
+    * contamination → `fin` (the curated set) → shard packing. Every
+    * CTE that the chain or an oracle references more than once is
+    * MATERIALIZED (the `Prep` k-means precedent): inlined, DuckDB
+    * re-evaluates the prefix chain, minhash signatures included, for
+    * each scalar subquery of the report. */
   private val corpusCtes =
     s"""b AS (
        |  SELECT doc_id, text, ${Llm.DTokens} AS w, length(text) AS chars,
@@ -952,24 +964,24 @@ object CorpusBuild {
        |    ${Llm.dHits(Llm.StopEn)} AS stop_hits, ${Llm.DLangHits},
        |    chars, punct
        |  FROM b),
-       |sc AS (
+       |sc AS MATERIALIZED (
        |  SELECT doc_id, text, tok,
        |    ${Llm.DScore} AS score,
        |    ${Llm.DLangPred} AS predicted
        |  FROM f),
-       |keptq AS (
+       |keptq AS MATERIALIZED (
        |  SELECT doc_id, text, tok FROM sc
        |  WHERE score >= $QualityMin AND predicted = 'en'),
-       |dd AS (
+       |dd AS MATERIALIZED (
        |  SELECT doc_id, text, tok,
        |    md5(regexp_replace(trim(lower(text)), '\\s+', ' ', 'g')) AS h
        |  FROM keptq),
-       |dk AS (
+       |dk AS MATERIALIZED (
        |  SELECT doc_id, text, tok FROM (
        |    SELECT *, row_number() OVER (
        |      PARTITION BY h ORDER BY doc_id) AS rn FROM dd)
        |  WHERE rn = 1),
-       |corpus AS (
+       |corpus AS MATERIALIZED (
        |  SELECT * FROM dk WHERE doc_id % ${Llm.DcProbeEvery} <> 0),
        |${Llm.minhashChainCtes("corpus", "nd")},
        |ndpairs AS (
@@ -977,7 +989,7 @@ object CorpusBuild {
        |  FROM ndbands a JOIN ndbands b
        |    ON a.band_id = b.band_id AND a.band_key = b.band_key
        |    AND a.doc_id < b.doc_id),
-       |ndlosers AS (
+       |ndlosers AS MATERIALIZED (
        |  SELECT DISTINCT c.doc_b AS doc_id
        |  FROM ndpairs c
        |  JOIN ndsh x ON x.doc_id = c.doc_a
@@ -985,7 +997,7 @@ object CorpusBuild {
        |  WHERE len(list_intersect(x.s, y.s))::DOUBLE /
        |        len(list_distinct(list_concat(x.s, y.s)))::DOUBLE
        |          >= ${Llm.MhThreshold}),
-       |corpus2 AS (
+       |corpus2 AS MATERIALIZED (
        |  SELECT * FROM corpus
        |  WHERE doc_id NOT IN (SELECT doc_id FROM ndlosers)),
        |ptoks AS (
@@ -999,18 +1011,18 @@ object CorpusBuild {
        |pg AS (SELECT doc_id AS probe_id, unnest(s) AS gram FROM psh),
        |ctoks AS (
        |  SELECT doc_id, ${Llm.DTokens} AS w FROM corpus2),
-       |csh AS (
+       |csh AS MATERIALIZED (
        |  SELECT doc_id, list_distinct(
        |    [array_to_string(list_slice(w, i, i + ${Llm.DcN - 1}), ' ')
        |     for i in range(1, len(w) - ${Llm.DcN - 2})]) AS s
        |  FROM ctoks WHERE len(w) >= ${Llm.DcN}),
        |cg AS (SELECT doc_id, unnest(s) AS gram FROM csh),
-       |contam AS (
+       |contam AS MATERIALIZED (
        |  SELECT DISTINCT doc_id FROM (
        |    SELECT cg.doc_id, pg.probe_id
        |    FROM cg JOIN pg USING (gram) WHERE cg.doc_id != pg.probe_id
        |    GROUP BY 1, 2 HAVING COUNT(*) >= ${Llm.DcMinShared})),
-       |fin AS (
+       |fin AS MATERIALIZED (
        |  SELECT * FROM corpus2
        |  WHERE doc_id NOT IN (SELECT doc_id FROM contam)),
        |pk AS (
@@ -1022,7 +1034,7 @@ object CorpusBuild {
        |  SELECT CAST(FLOOR(prev / $ShardBudget.0) AS BIGINT) AS shard,
        |    SUM(tok) AS st
        |  FROM pk GROUP BY shard),
-       |m AS (
+       |m AS MATERIALIZED (
        |  SELECT CAST(COUNT(*) AS BIGINT) AS n_shards,
        |    CAST(COALESCE(SUM(st), 0) AS BIGINT) AS total_tokens,
        |    CAST(COALESCE(MAX(st), 0) AS BIGINT) AS max_shard_tokens

@@ -105,7 +105,12 @@ object Llm {
     * FRAGMENT, reading docs from relation `src` and emitting CTEs
     * `${p}toks/${p}sh/${p}sig/${p}bands` — lets a composite oracle
     * (the corpus build's near-dedup stage) embed the q23-checked
-    * pipeline over an intermediate CTE without name collisions. */
+    * pipeline over an intermediate CTE without name collisions.
+    * `sh`, `sig` and `bands` are MATERIALIZED: each is referenced
+    * more than once (`sig` by every band leg, `bands` on both sides of
+    * the candidate self-join, `sh` by the verification joins), and
+    * inlining would re-run the signatures — 32 md5 per shingle — per
+    * reference. */
   private[queries] def minhashChainCtes(src: String, p: String): String = {
     val r = MhHashes / MhBands
     // Carter-Wegman family: member i = h1 + i * (h2 mod 2^50) — must
@@ -121,14 +126,14 @@ object Llm {
     }.mkString("\n  UNION ALL\n  ")
     s"""${p}toks AS (
   SELECT doc_id, $DTokens AS w FROM $src),
-${p}sh AS (
+${p}sh AS MATERIALIZED (
   SELECT doc_id,
     list_distinct([array_to_string(list_slice(w, i, i + ${MhShingle - 1}), ' ')
                    for i in range(1, len(w) - ${MhShingle - 2})]) AS s
   FROM ${p}toks WHERE len(w) >= $MhShingle),
-${p}sig AS (
+${p}sig AS MATERIALIZED (
   SELECT doc_id, s, $sigs FROM ${p}sh),
-${p}bands AS (
+${p}bands AS MATERIALIZED (
   $bandLegs)"""
   }
 

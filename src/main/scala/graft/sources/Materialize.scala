@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 /** dbt-style materialization (reference `dbt_project.yml:25-43`:
   * raw/staging/intermediate are VIEWS, marts are TABLES).
@@ -605,6 +605,42 @@ object Materialize {
     }
   }
 
+  /** Replace the `touched` partitions (value lists over `partCols`) of
+    * `name` with `rows`, clustered by the first partition column, under
+    * [[withDynamicOverwrite]]. Dynamic overwrite leaves a partition
+    * absent from the output as it was, so the non-empty set rides the
+    * write as an observe metric and every other touched partition goes
+    * to ONE batched [[dropPartitions]]. With a `keep` predicate (an
+    * erasure), only the rows passing it are written back, and only the
+    * partitions that held a row failing it can be dropped: `rows` then
+    * carries just the partitions to rewrite. The observe sits after the
+    * clustering exchange, where AQE's empty-stage pruning cannot remove
+    * it. Returns (rows failing `keep`, partitions that held one). */
+  private[graft] def overwritePartitions(spark: SparkSession, name: String,
+      rows: DataFrame, partCols: Seq[String], touched: Seq[Seq[Any]],
+      keepOnly: Option[Column] = None): (Long, Seq[Seq[Any]]) = {
+    import org.apache.spark.sql.functions.{col, collect_set, count, lit,
+      struct, when}
+    val obs = org.apache.spark.sql.Observation()
+    val part = struct(partCols.map(col): _*)
+    val keep = keepOnly.getOrElse(lit(true))
+    withDynamicOverwrite(spark) {
+      rows.repartition(col(partCols.head))
+        .observe(obs, count(when(!keep, 1)).as("dropped"),
+          collect_set(when(!keep, part)).as("hit"),
+          collect_set(when(keep, part)).as("kept"))
+        .filter(keep)
+        .select(spark.table(name).columns.toSeq.map(col): _*)
+        .write.mode("overwrite").insertInto(name)
+    }
+    def parts(k: String) = graft.quality.Quality.obsSeq(obs, k)
+      .map(_.asInstanceOf[org.apache.spark.sql.Row].toSeq)
+    val (hit, kept) = (parts("hit"), parts("kept").toSet)
+    dropPartitions(spark, name, (if (keepOnly.isEmpty) touched else hit)
+      .filterNot(kept.contains).map(partCols.zip(_)))
+    (graft.quality.Quality.obsLong(obs, "dropped"), hit)
+  }
+
   /** Crash/replay contract (spec: "tableIncremental replay
     * converges"): the dynamic-partition-overwrite commit replaces each
     * touched partition near-atomically, but the SET of touched
@@ -637,19 +673,8 @@ object Materialize {
         .filter(col(partitionCol).isin(touched: _*))
       val merged = dedup(existing
         .unionByName(increment.select(cols.map(col): _*)))
-      val PoKey = "spark.sql.sources.partitionOverwriteMode"
-      val prev = spark.conf.getOption(PoKey)
-      spark.conf.set(PoKey, "dynamic")
-      // insertInto is positional — select in table-schema order;
-      // repartition by the partition value for the same
-      // files-per-partition bound as the initial load
-      try merged.select(cols.map(col): _*)
-        .repartition(col(partitionCol))
-        .write.mode("overwrite").insertInto(name)
-      finally prev match {
-        case Some(v) => spark.conf.set(PoKey, v)
-        case None => spark.conf.unset(PoKey)
-      }
+      overwritePartitions(spark, name, merged, Seq(partitionCol),
+        touched.map(Seq(_)))
     }
     spark.table(name)
   }
@@ -683,57 +708,57 @@ object Materialize {
     * that actually contain a target key. One pruned-aggregate scan
     * finds the affected partition values (rows matching keys →
     * distinct partition value — a bounded list, same contract as
-    * [[tableIncremental]]'s touched set); those partitions are
-    * rewritten minus the matching rows via dynamic partition
-    * overwrite; untouched partitions are untouched bytes. `keys` is
-    * broadcast through both uses — an erasure batch is a bounded
-    * request list, not data. Returns the affected partition values
-    * (the audit trail a DPO wants). */
+    * [[tableIncremental]]'s touched set); [[eraseKeysIn]] rewrites
+    * those partitions minus the matching rows; untouched partitions
+    * are untouched bytes. `keys` is broadcast through both uses — an
+    * erasure batch is a bounded request list, not data. Returns the
+    * affected partition values (the audit trail a DPO wants). */
   def eraseKeys(spark: SparkSession, name: String, keyCol: String,
       keys: DataFrame, partitionCol: String): Seq[Any] = {
     import org.apache.spark.sql.functions.{broadcast, col}
-    val k = broadcast(keys.select(col(keys.columns.head).as(keyCol))
-      .distinct())
-    val affected = spark.table(name).join(k, Seq(keyCol), "left_semi")
+    val k = keys.select(col(keys.columns.head).as(keyCol)).distinct()
+    val affected = spark.table(name).join(broadcast(k), Seq(keyCol),
+        "left_semi")
       .select(col(partitionCol)).distinct()
       .collect().map(_.get(0)).toSeq
-    eraseKeysIn(spark, name, keyCol, keys, partitionCol, affected)
+    eraseKeysIn(spark, name, keyCol, k, partitionCol, affected)
     affected
   }
 
-  /** The rewrite half of [[eraseKeys]], with the affected partition
-    * values already discovered: a multi-artifact erasure (the corpus
-    * [[graft.queries.CorpusBuild.eraseDocs]]) finds every table's
-    * affected list in ONE combined action, then runs these rewrites in
-    * PARALLEL — safe because each call targets its own table (own
-    * committer staging dir; contrast [[checkpointPartials]]' same-table
-    * serial commit loop), and the emptied-slice drop is one batched
-    * statement per table via [[dropPartitions]]. */
+  /** The rewrite half of [[eraseKeys]], as ONE write action: only the
+    * CANDIDATE partitions that hold a requested key (a key-column scan
+    * of the candidates, broadcast into the rewrite's semi-join) are
+    * rewritten, through a broadcast left join that flags the keys'
+    * rows; the unflagged rows go back via [[overwritePartitions]], and
+    * emptied partitions are dropped in one batched statement. A
+    * candidate without a key is never rewritten, so candidates need not
+    * hold one — the corpus [[graft.queries.CorpusBuild.eraseDocs]]
+    * derives them from the request itself, with no discovery action,
+    * and a replayed request writes nothing — and what the erasure found
+    * rides the write as observe metrics: returns (rows erased,
+    * partitions that held an erased row). `keys` is one DISTINCT
+    * `keyCol` column (a repeated key would repeat its rows through the
+    * join). Different tables' calls may run in PARALLEL (each has its
+    * own committer staging dir; contrast [[checkpointPartials]]'
+    * same-table serial commit loop) inside one outer
+    * [[withDynamicOverwrite]]. */
   private[graft] def eraseKeysIn(spark: SparkSession, name: String,
       keyCol: String, keys: DataFrame, partitionCol: String,
-      affected: Seq[Any]): Unit =
-    if (affected.nonEmpty) {
-      import org.apache.spark.sql.functions.{broadcast, col}
-      val k = broadcast(keys.select(col(keys.columns.head).as(keyCol))
-        .distinct())
-      val t = spark.table(name)
-      val schema = t.schema
-      val kept = t.filter(col(partitionCol).isin(affected: _*))
-        .join(k, Seq(keyCol), "left_anti")
-      // dynamic overwrite only rewrites partitions PRESENT in the
-      // output: a partition erased down to zero rows must be dropped
-      // explicitly or its stale files survive
-      val keptParts = kept.select(col(partitionCol)).distinct()
-        .collect().map(_.get(0)).toSet
-      withDynamicOverwrite(spark) {
-        kept
-          .select(schema.map(f => col(f.name)): _*)
-          .repartition(col(partitionCol))
-          .write.mode("overwrite").insertInto(name)
-      }
-      dropPartitions(spark, name,
-        affected.filterNot(keptParts.contains)
-          .map(v => Seq(partitionCol -> v)))
+      candidates: Seq[Any]): (Long, Seq[Any]) =
+    if (candidates.isEmpty) (0L, Nil)
+    else {
+      import org.apache.spark.sql.functions.{broadcast, col, lit}
+      val slices =
+        spark.table(name).filter(col(partitionCol).isin(candidates: _*))
+      val hitSlices = slices.join(broadcast(keys), Seq(keyCol), "left_semi")
+        .select(col(partitionCol)).distinct()
+      val (n, hit) = overwritePartitions(spark, name,
+        slices.join(broadcast(hitSlices), Seq(partitionCol), "left_semi")
+          .join(broadcast(keys.withColumn("__erased", lit(true))),
+            Seq(keyCol), "left"),
+        Seq(partitionCol), candidates.map(Seq(_)),
+        keepOnly = Some(col("__erased").isNull))
+      (n, hit.map(_.head))
     }
 
   /** Right-to-erasure for an INCREMENTAL aggregate — the
@@ -807,28 +832,16 @@ object Materialize {
           .select(col(partitionCol), col("__batch")).distinct()
           .collect().map(r => (r.get(0), r.getString(1))).toSeq
         if (slices.nonEmpty) {
-          val schema = t.schema
           // ONLY the touched slices: untouched batch slices of an
           // affected partition never enter the output, so dynamic
           // overwrite never rewrites them
           val touched = slices.map { case (p, b) =>
             col(partitionCol) === lit(p) && col("__batch") === lit(b)
           }.reduce(_ || _)
-          val kept = t.filter(touched).join(k, Seq(keyCol), "left_anti")
-          // bounded: <= |slices| — taken BEFORE the overwrite so the
-          // drop list reads one consistent snapshot
-          val keptSlices = kept
-            .select(col(partitionCol), col("__batch")).distinct()
-            .collect().map(r => (r.get(0), r.getString(1))).toSet
-          withDynamicOverwrite(spark) {
-            kept.select(schema.map(f => col(f.name)): _*)
-              .repartition(col(partitionCol))
-              .write.mode("overwrite").insertInto(partials)
-          }
-          dropPartitions(spark, partials,
-            slices.filterNot(keptSlices.contains).map { case (p, b) =>
-              Seq(partitionCol -> p, "__batch" -> b)
-            })
+          overwritePartitions(spark, partials,
+            t.filter(touched).join(k, Seq(keyCol), "left_anti"),
+            Seq(partitionCol, "__batch"),
+            slices.map { case (p, b) => Seq(p, b) })
           refresh(spark, partials)
         }
         slices.size.toLong
@@ -900,8 +913,8 @@ object Materialize {
     * publish/recover protocol must go through here. */
   private[graft] def renameTable(spark: SparkSession, from: String,
       to: String): Boolean = {
-    val partitioned =
-      spark.catalog.listColumns(from).collect().exists(_.isPartition)
+    val partitioned = org.apache.spark.sql.graft.CatalogMeta.of(spark, from)
+      .partitionColumnNames.nonEmpty
     MetaOps.inc("rename_table")
     spark.sql(s"ALTER TABLE $from RENAME TO $to")
     if (partitioned) { MetaOps.inc("msck_repair")
@@ -944,9 +957,12 @@ object Materialize {
     *     create-if-absent is the mutex): a concurrent publisher, or a
     *     session racing an unrecovered crash, fails loudly HERE,
     *     before it can stage over anything;
-    *  2. stage every `<name>__staging`, in member order;
-    *  3. audit all (fail → drop stagings + marker, previous versions
-    *     serve);
+    *  2. stage every `<name>__staging` CONCURRENTLY, one
+    *     [[graft.operators.Par]] branch per member;
+    *  3. audit all in one action (fail → drop stagings + marker,
+    *     previous versions serve); on a pass, mark the marker's
+    *     `graft.publish.phase` property `swap` — the point of no
+    *     return-without-rollback that [[recoverSet]] reads;
     *  4. per member, in order: drop old `__prev`, rename name→prev
     *     (rename-ASIDE, not drop: the previous version exists on disk
     *     until the whole set is in, so rollback stays possible),
@@ -964,41 +980,43 @@ object Materialize {
     * their table.
     *
     * `crashAfter` is TEST-ONLY fault injection: k ≥ 0 throws
-    * [[CrashInjected]] after the k-th step of the sequence completes,
-    * counting from 0 over n members: marker taken (0); member i staged
-    * (1 + i); audit run (n + 1); for member i, prev dropped
+    * [[CrashInjected]] at the k-th point of the sequence, numbered
+    * from 0 over n members: marker taken (0); member i staged (1 + i —
+    * members then stage in order rather than concurrently, so the
+    * crash leaves members 0..i staged and the later ones not; the
+    * concurrent run reaches any other subset, which [[recoverSet]]
+    * handles alike); audit run (n + 1); for member i, prev dropped
     * (n + 2 + 3i), renamed aside (n + 3 + 3i), renamed in (n + 4 + 3i);
-    * before cleanup (4n + 2). Any other failure before the first
-    * rename drops this call's stagings and frees the marker: nothing
-    * was swapped, so there is nothing to recover. */
+    * before cleanup (4n + 2). Any other failure before the swap phase
+    * drops this call's stagings and frees the marker: nothing was
+    * swapped, so there is nothing to recover. */
   def publishSetAudited(setName: String, members: Seq[Member],
       warnAsError: Boolean = false, crashAfter: Int = -1)
       : (Boolean, Seq[(String, Seq[graft.quality.Quality.Result])]) = {
     require(members.nonEmpty, "empty publish set")
     val spark = members.head.df.sparkSession
-    var step = -1
-    def stepDone(): Unit = {
-      step += 1
+    val n = members.size
+    def reached(step: Int): Unit =
       if (step == crashAfter) throw new CrashInjected(step)
-    }
-    // last member's staging first: a crash part-way leaves the marker
-    // and the FIRST members' stagings, which recoverSet reads as the
-    // staging phase (nothing swapped)
     def abandon(): Unit = {
-      members.reverse.foreach(m => dropTable(spark, s"${m.name}__staging"))
+      members.foreach(m => dropTable(spark, s"${m.name}__staging"))
       dropTable(spark, markerOf(setName))
     }
     takeMarker(spark, setName, members.map(_.name))
-    stepDone()
+    reached(0)
     val (counts, results) = try {
-      members.foreach { m =>
+      val stagings = members.zipWithIndex.map { case (m, i) => () => {
         val staging = s"${m.name}__staging"
         m.partitionCol match {
           case Some(c) => partitionedTable(m.df, staging, c)
           case None => table(m.df, staging)
         }
-        stepDone()
-      }
+        reached(1 + i)
+      } }
+      // a crash injected at a staging point stages in member order, so
+      // it leaves exactly members 0..i staged and the rest not started
+      if (crashAfter >= 1 && crashAfter <= n) stagings.foreach(_())
+      else graft.operators.Par.run(spark)(stagings: _*)
       // ONE action audits every staged table's whole suite (the gate is
       // the action-count hot spot of every composed build that publishes
       // through it). A hidden NonEmpty leg per member rides the same
@@ -1011,7 +1029,12 @@ object Materialize {
         m.name -> graft.quality.Quality.resultsOf(m.checks, cs.init,
           warnAsError)
       }
-      stepDone()
+      reached(n + 1)
+      if (results.forall(_._2.forall(_.passed))) {
+        MetaOps.inc("mark_swap_phase")
+        spark.sql(s"ALTER TABLE ${markerOf(setName)} SET TBLPROPERTIES " +
+          s"('$PhaseKey' = 'swap')")
+      }
       (counts, results)
     } catch {
       case e: CrashInjected => throw e
@@ -1024,14 +1047,14 @@ object Materialize {
       abandon()
       return (false, results)
     }
-    members.zip(counts).foreach { case (m, cs) =>
+    members.zip(counts).zipWithIndex.foreach { case ((m, cs), i) =>
       val prev = s"${m.name}__prev"
       dropTable(spark, prev)
       dropOrphanLocation(spark, prev)
-      stepDone()
+      reached(n + 2 + 3 * i)
       if (spark.catalog.tableExists(m.name))
         renameTable(spark, m.name, prev)
-      stepDone()
+      reached(n + 3 + 3 * i)
       // a previous JVM's published table may survive as files with no
       // catalog entry (in-memory catalog died) — clear the orphan or
       // the rename refuses with LOCATION_ALREADY_EXISTS
@@ -1055,9 +1078,9 @@ object Materialize {
       if (renamedPartitioned && cs.last == 0L)
         require(!spark.table(m.name).isEmpty,
           s"publish of ${m.name}: staged rows lost in the swap")
-      stepDone()
+      reached(n + 4 + 3 * i)
     }
-    stepDone()
+    reached(4 * n + 2)
     members.foreach(m => dropTable(spark, s"${m.name}__prev"))
     dropTable(spark, markerOf(setName))
     (true, results)
@@ -1065,6 +1088,7 @@ object Materialize {
 
   private def markerOf(setName: String) = s"${setName}__swapping"
   private val MembersKey = "graft.publish.members"
+  private val PhaseKey = "graft.publish.phase"
 
   /** Step 1 of [[publishSetAudited]]: create the set's marker table
     * with the members' names, in publish order, as a table property —
@@ -1097,20 +1121,22 @@ object Materialize {
     * publish drops its stagings before it frees the marker). Marker
     * present and no staging left → every member swapped (or none was
     * staged yet): roll FORWARD, i.e. finish the cleanup. Otherwise
-    * roll BACK. Members swap only after ALL are staged, so while the
-    * LAST member has no staging the crash hit the staging phase and
-    * nothing swapped; once it has one, a member without staging has
-    * swapped — it gets its new version dropped and the previous one
-    * restored (or goes back to unpublished on a first release), and an
-    * unswapped member keeps (or gets back from `__prev`) its previous
-    * version. Idempotent once it has returned. Returns "forward",
-    * "back", or "noop". */
+    * roll BACK. The phase is read off the marker, never inferred from
+    * which stagings exist (members stage concurrently, so any subset
+    * of them may be staged when a crash hits): without the `swap`
+    * phase property the audit had not passed, nothing swapped, and
+    * only the stagings are dropped; with it, a member without staging
+    * has swapped — it gets its new version dropped and the previous
+    * one restored (or goes back to unpublished on a first release),
+    * and an unswapped member keeps (or gets back from `__prev`) its
+    * previous version. Idempotent once it has returned. Returns
+    * "forward", "back", or "noop". */
   def recoverSet(spark: SparkSession, setName: String): String = {
     val marker = markerOf(setName)
     if (!spark.catalog.tableExists(marker)) return "noop"
-    val names = spark.sql(s"SHOW TBLPROPERTIES $marker").collect()
-      .collectFirst { case r if r.getString(0) == MembersKey =>
-        r.getString(1).split(",").toSeq }
+    val props = spark.sql(s"SHOW TBLPROPERTIES $marker").collect()
+      .map(r => r.getString(0) -> r.getString(1)).toMap
+    val names = props.get(MembersKey).map(_.split(",").toSeq)
       .getOrElse(throw new IllegalStateException(
         s"marker $marker names no members"))
     def staging(n: String) = s"${n}__staging"
@@ -1122,7 +1148,7 @@ object Materialize {
       dropTable(spark, marker)
       "forward"
     } else {
-      val swapping = staged(names.last)
+      val swapping = props.get(PhaseKey).contains("swap")
       names.foreach { n =>
         if (staged(n)) {
           // not yet swapped: the previous version either still holds

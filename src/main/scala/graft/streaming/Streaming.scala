@@ -464,19 +464,11 @@ object Streaming {
                 .collect().map(_.get(0)).toSeq
               val existing = s.table(name)
                 .filter(col("day").isin(touched: _*))
-              val merged = existing.unionByName(partial)
-                .groupBy(col("day"))
-                .agg(Sketch.thetaUnion(col("sketch")).as("sketch"))
-              val PoKey = "spark.sql.sources.partitionOverwriteMode"
-              val prev = s.conf.getOption(PoKey)
-              s.conf.set(PoKey, "dynamic")
-              try merged.select(col("sketch"), col("day"))
-                .repartition(col("day"))
-                .write.mode("overwrite").insertInto(name)
-              finally prev match {
-                case Some(v) => s.conf.set(PoKey, v)
-                case None => s.conf.unset(PoKey)
-              }
+              graft.sources.Materialize.overwritePartitions(s, name,
+                existing.unionByName(partial)
+                  .groupBy(col("day"))
+                  .agg(Sketch.thetaUnion(col("sketch")).as("sketch")),
+                Seq("day"), touched.map(Seq(_)))
             }
             ()
           }

@@ -1,6 +1,8 @@
 package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.TableIdentifier
+import org.apache.spark.sql.catalyst.catalog.CatalogTable
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
 
@@ -23,4 +25,13 @@ object GraftSqlRegistry {
       spark.sessionState.functionRegistry
         .registerFunction(id, info, builder)
     }
+}
+
+/** A catalog table's metadata (properties, partition columns) read
+  * straight from the session catalog: no query execution, where a
+  * `SHOW TBLPROPERTIES` or `catalog.listColumns` collect is one. */
+object CatalogMeta {
+  def of(spark: org.apache.spark.sql.SparkSession, name: String)
+      : CatalogTable =
+    spark.sessionState.catalog.getTableMetadata(TableIdentifier(name))
 }

@@ -351,6 +351,97 @@ class CorpusBuildSpec extends SparkSpec {
     assert(rep2(("erase", "bands", "rows_erased")) == 0)
     assert((snap("curated"), snap("grams"), snap("probes")) ==
       ((cur1, grams1, probes1)))
+
+    // ids no table holds — one inside the tables' partition, one whose
+    // partition no table has — report zero and change nothing
+    val tables = Seq("curated", "grams", "probes", "bands", "removed")
+    val before = tables.map(snap)
+    val ghost = (maxId + 2 to maxId + 40)
+      .find(i => !before.exists(_.exists(_.head == i))).get
+    val farId = CorpusBuild.curatedPartSpan * 1000 + 7
+    val rep3 = repOf(CorpusBuild.eraseDocs(spark, dirE,
+      Seq(ghost, farId).toDF("doc_id")))
+    rep3.collect { case (k @ ("erase", _, _), v) => assert(v == 0, k) }
+    assert(rep3(("shards", "manifest", "published")) == 1)
+    assert(tables.map(snap) == before)
+
+    // a request that empties a table's partition: every archived doc
+    // leaves the removed archive, whose one slice is then dropped —
+    // nothing stale reads back, and no other artifact loses a doc it
+    // did not hold
+    val archived = snap("removed").map(_.head.asInstanceOf[Long]).toSeq
+    assert(archived.nonEmpty)
+    val bands2 = snap("bands")
+    val rep4 = repOf(CorpusBuild.eraseDocs(spark, dirE,
+      archived.toDF("doc_id")))
+    assert(rep4(("erase", "removed", "docs_erased")) == archived.size)
+    assert(rep4(("erase", "curated", "docs_erased")) == 0)
+    assert(snap("removed").isEmpty)
+    assert(spark.sql(s"SHOW PARTITIONS e2e_corpus_removed_$h").isEmpty)
+    assert(snap("bands") ==
+      bands2.filterNot(r => archived.contains(r.head)))
+    assert(snap("curated") == before.head)
+  }
+
+  test("erasure over many slices rewrites only the slices that held a " +
+      "requested doc, writes nothing on replay, and addresses the " +
+      "slices the tables were built with") {
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    val dirP = "/tmp/graft_test_erase_slices"
+    graft.sources.Ingest.deletePath(spark, dirP)
+    spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+      .write.mode("overwrite").parquet(s"$dirP/documents.parquet")
+    // built over 100-id slices; the erasure runs under the default span,
+    // which would put every one of these ids in slice 0
+    val span = 100L
+    sys.props("graft.corpus.partSpan") = span.toString
+    try CorpusBuild.run(spark, dirP)
+    finally { sys.props.remove("graft.corpus.partSpan"); () }
+    val h = math.abs(dirP.hashCode).toString
+    val tables = Seq("curated", "grams", "bands", "removed")
+    def t(n: String) = spark.table(s"e2e_corpus_${n}_$h")
+    // slice → its data files (a rewritten slice gets new files)
+    def files(n: String): Map[Long, Set[String]] =
+      t(n).select(col("pt"), input_file_name()).distinct().collect()
+        .groupBy(_.getLong(0)).map { case (p, rs) =>
+          p -> rs.map(_.getString(1)).toSet }
+    def ids(n: String) =
+      t(n).select("doc_id").collect().map(_.getLong(0)).toSet
+    val files0 = tables.map(n => n -> files(n)).toMap
+    assert(files0("curated").size > 2)
+    val cur0 = ids("curated")
+    // a curated doc of the LAST slice, and an id of slice 1 that none
+    // of the four tables holds
+    val doc = cur0.max
+    val docPt = doc / span
+    assert(docPt > 1)
+    val held = tables.flatMap(ids).toSet
+    val ghost = (span until 2 * span).find(i => !held.contains(i)).get
+    val inProbes = ids("probes").contains(ghost)
+    val req = Seq(doc, ghost).toDF("doc_id")
+    def repOf(df: org.apache.spark.sql.DataFrame) = rows(df)
+      .map(r => ((r.getString(0), r.getString(1), r.getString(2)),
+        r.getLong(3))).toMap
+    val rep = repOf(CorpusBuild.eraseDocs(spark, dirP, req))
+    assert(rep(("erase", "curated", "docs_erased")) == 1)
+    assert(rep(("erase", "curated", "partitions_rewritten")) == 1)
+    assert(rep(("erase", "probes", "docs_erased")) ==
+      (if (inProbes) 1L else 0L))
+    assert(ids("curated") == cur0 - doc)
+    val files1 = tables.map(n => n -> files(n)).toMap
+    // only the erased doc's slice was rewritten, and only where it
+    // held rows; slice 1 (the ghost's) kept its files everywhere
+    tables.foreach { n =>
+      files0(n).foreach { case (p, fs) =>
+        if (p != docPt) assert(files1(n).get(p).contains(fs), s"$n pt=$p")
+      }
+    }
+    assert(files1("curated").get(docPt) != files0("curated").get(docPt))
+    // replay: nothing erased, nothing written
+    val rep2 = repOf(CorpusBuild.eraseDocs(spark, dirP, req))
+    rep2.collect { case (k @ ("erase", _, _), v) => assert(v == 0, k) }
+    assert(tables.map(n => n -> files(n)).toMap == files1)
   }
 
   test("the curation build is deterministic under replay") {

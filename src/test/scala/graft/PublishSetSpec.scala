@@ -89,11 +89,13 @@ class PublishSetSpec extends SparkSpec {
   test("a crash at every swap point recovers to ONE consistent " +
       "generation, idempotently, and a retry lands the new one") {
     // 2 tables, the second PARTITIONED → 11 injection points: marker
-    // (0), staged (1, 2), audited (3), per table i prev dropped,
-    // renamed aside, renamed in (4 + 3i, 5 + 3i, 6 + 3i: after 6 the
-    // set is mixed on disk!), before cleanup (10). Recovery rolls
-    // back until the last rename-in; a crash right after the marker
-    // has nothing to roll and just frees it (forward, old generation).
+    // (0), staged (1, 2: a crash there stages in member order, so 1
+    // leaves member 0 staged and member 1 not), audited (3), per table
+    // i prev dropped, renamed aside, renamed in (4 + 3i, 5 + 3i,
+    // 6 + 3i: after 6 the set is mixed on disk!), before cleanup (10).
+    // Recovery rolls back until the last rename-in; a crash right
+    // after the marker has nothing to roll and just frees it
+    // (forward, old generation).
     def members(g: Int) = Seq(
       Member(gen(1, g), "pset_c1", Seq(NotNull("k"), Unique(Seq("k")))),
       Member(gen(2, g), "pset_c2", Seq(NotNull("k")), Some("v")))
@@ -106,6 +108,11 @@ class PublishSetSpec extends SparkSpec {
         Materialize.publishSetAudited("pset_c", members(2),
           crashAfter = k)
       }
+      // every partial-staging state is reached: at staged(i) exactly
+      // members 0..i hold a staging
+      if (k >= PublishSteps.staged(0) && k <= PublishSteps.staged(1))
+        assert(names.map(n => spark.catalog.tableExists(s"${n}__staging"))
+          == names.indices.map(_ <= k - PublishSteps.staged(0)), s"k=$k")
       val dir = Materialize.recoverSet(spark, "pset_c")
       val expected =
         if (k == 0) ("forward", 1L)
@@ -128,6 +135,29 @@ class PublishSetSpec extends SparkSpec {
       assert(retry._1 &&
         names.map(generation) == Seq(Some(2L), Some(2L)), s"k=$k")
     }
+  }
+
+  test("a staging-phase crash with a LATER member staged and an " +
+      "earlier one not rolls back and keeps every published table") {
+    // members stage concurrently, so member 1's write can land while
+    // member 0's is still running when the crash hits — a state the
+    // in-order crash injection never leaves: the phase comes from the
+    // marker, not from which stagings exist
+    val names = Seq("pset_cs1", "pset_cs2")
+    reset(names, "pset_cs")
+    def members(g: Int) = names.zipWithIndex.map { case (n, i) =>
+      Member(gen(i.toLong + 1, g), n, Seq(NotNull("k"))) }
+    assert(Materialize.publishSetAudited("pset_cs", members(1))._1)
+    Materialize.takeMarker(spark, "pset_cs", names)
+    Materialize.table(gen(2, 2), s"${names(1)}__staging")
+    assert(Materialize.recoverSet(spark, "pset_cs") == "back")
+    assert(names.map(generation) == Seq(Some(1L), Some(1L)))
+    names.foreach(n =>
+      assert(!spark.catalog.tableExists(s"${n}__staging"), n))
+    assert(!spark.catalog.tableExists("pset_cs__swapping"))
+    assert(Materialize.publishSetAudited("pset_cs", members(2))._1)
+    assert(names.map(generation) == Seq(Some(2L), Some(2L)))
+    reset(names, "pset_cs")
   }
 
   test("a FIRST publish crashed mid-swap rolls back to unpublished") {
