@@ -45,11 +45,6 @@ object Bench {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // bisect knob (harness-only, VERDICT r13 #1): force the KMeans HOF
-    // assignment form below the SmallK threshold, so an isolated A/B of
-    // the SAME build separates form cost from everything else
-    if (sys.env.get("SPARK_GRAFT_KMEANS_FORCE_HOF").contains("1"))
-      graft.operators.KMeans.forceHof = true
     // untimed warmup: representative queries absorb the one-off
     // whole-stage-codegen/JIT infra startup (~5-10 s) that would
     // otherwise land on whichever timed query happens to run first.

@@ -15,6 +15,10 @@ object BenchSub {
       // (measured, JobProfile q250). Up to 256 paths the driver lists
       // in microseconds; beyond that the distributed path is right.
       .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "256")
+      // the engine contract (SURVEY §1.2) and the NTZ→Timestamp coercion
+      // in Tables both assume UTC wall-clock ≡ instant; an unpinned
+      // session on a non-UTC machine would time a shifted workload
+      .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -35,7 +35,7 @@ object NprobeCurve {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    import graft.operators.{AnnIndex, InternalCache, KMeans, Similarity}
+    import graft.operators.{AnnIndex, InternalCache, Similarity}
     val dir = s"/tmp/graft_scale_x$mult"
     ScaleBench.buildReplica(spark, baseDir, mult, dir)
     val emb = spark.read.parquet(s"$dir/embeddings.parquet")
@@ -59,13 +59,7 @@ object NprobeCurve {
     val maxP = 8
     // full probe list per query once, rank kept: leg p reads its prefix
     val qpr = InternalCache.persist(
-      KMeans.withCellN(
-          q.withColumn("__vq", KMeans.quantize(col("qvec"))),
-          "__vq", AnnIndex.loadCentroids(spark, name), maxP)
-        .select(col("query_id"),
-          posexplode(array((0 until maxP)
-            .map(i => col(s"__probe$i").cast("long")): _*))
-            .as(Seq("pidx", "probe"))))
+      AnnIndex.rankedProbes(spark, name, q, maxP))
     val lines = for (selMax <- Seq(1, 3)) yield {
       val f = posts.filter(col("label") < selMax)
       val exact = InternalCache.persist(

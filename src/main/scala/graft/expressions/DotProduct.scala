@@ -18,7 +18,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType,
   *
   * Why it exists: LSH bucket assignment and IVF cell assignment
   * evaluate 6-8 plane/centroid dots PER VECTOR (`Similarity.lshBucket`
-  * / `withIvfCell`); the HOF form runs one interpreted lambda call per
+  * / `ivfProbes`); the HOF form runs one interpreted lambda call per
   * element per plane, which puts candidate generation — the part of ANN
   * that scans the whole corpus — outside whole-stage codegen. This
   * compiles to a fused primitive loop. Null contract matches the HOF

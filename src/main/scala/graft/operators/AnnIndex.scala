@@ -6,8 +6,9 @@ import org.apache.spark.sql.functions._
 import graft.quality.{NonEmpty, NotNull, Unique}
 import graft.sources.Materialize
 
-/** The PERSISTED trained-IVF ANN index — the production form of
-  * [[Similarity.trainedIvfTopK]]'s inline search (reference basis: the
+/** The PERSISTED trained-IVF ANN index — the production form of the
+  * inline trained-IVF search (q100: [[KMeans.nearestCells]] cells
+  * through [[Similarity.probeTopK]]; reference basis: the
   * embedding/ANN surface of the LLM extension; the inline queries
   * re-train and re-assign per run, which a 100 TB corpus cannot
   * afford). The index is two published catalog tables:
@@ -66,13 +67,16 @@ object AnnIndex {
   private def assign(df: DataFrame, idCol: String, vecCol: String,
       cents: Array[Array[Double]], attrCols: Seq[String] = Nil)
       : DataFrame =
-    KMeans.withCellDist(
-        df.select(col(idCol).as("id") +: col(vecCol).as("vec") +:
-          attrCols.map(col): _*)
-          .withColumn("__vq", KMeans.quantize(col("vec"))),
-        "__vq", cents)
+    cellOf(df.select(col(idCol).as("id") +: col(vecCol).as("vec") +:
+        attrCols.map(col): _*)
+        .withColumn("__vq", KMeans.quantize(col("vec"))), cents, attrCols)
+
+  /** (id, vec, attrs..., cell) of a frame already carrying `__vq`. */
+  private def cellOf(vq: DataFrame, cents: Array[Array[Double]],
+      attrCols: Seq[String]): DataFrame =
+    KMeans.nearestCells(vq, "__vq", cents, 1)
       .select(col("id") +: col("vec") +: attrCols.map(col) :+
-        col("__cell").cast("long").as("cell"): _*)
+        col("__probe0").cast("long").as("cell"): _*)
 
   /** Train on `vectors` and publish the index; returns the posting
     * count. `vectors` is scanned `iters + 1` times (persisted through
@@ -110,10 +114,7 @@ object AnnIndex {
     Materialize.publishSetAudited(centroidsTable(name), Seq(
       Materialize.Member(cdf, centroidsTable(name),
         Seq(NotNull("cell"), NotNull("c"), Unique(Seq("cell"))))))
-    Materialize.partitionedTable(
-      KMeans.withCellDist(vq, "__vq", cents)
-        .select(col("id") +: col("vec") +: attrCols.map(col) :+
-          col("__cell").cast("long").as("cell"): _*),
+    Materialize.partitionedTable(cellOf(vq, cents, attrCols),
       postingsTable(name), "cell")
     InternalCache.release()
     spark.table(postingsTable(name)).count()
@@ -293,11 +294,10 @@ object AnnIndex {
             Some(batch.select(col(idCol).as("id"))))
           // sibling leg: smaller-id batch docs whose assigned cell is
           // probed — the shape append-then-search would have given
-          val sibScored = assign(batch, idCol, vecCol, cents)
-            .join(broadcast(qp),
-              col("cell") === col("probe") && col("id") < col("query_id"))
-            .select(col("query_id"), col("id"),
-              Similarity.cosineF(col("vec"), col("qvec")).as("score"))
+          val sibScored = Similarity.probeScores(
+              assign(batch, idCol, vecCol, cents), "id", "vec", col("cell"),
+              qp, "query_id", "qvec", col("__probes"))
+            .filter(col("id") < col("query_id"))
           val best = Similarity
             .topKPerQuery(idxScored.unionByName(sibScored), 1)
             .select(col("query_id").as(idCol),
@@ -466,19 +466,10 @@ object AnnIndex {
     val vq = InternalCache.persist(
       content.withColumn("__vq", KMeans.quantize(col("vec"))))
     val cand = KMeans.fit(vq, "__vq", cells, dims, iters)
-    val assigned = KMeans.withCellDist(vq, "__vq", cand)
-      .select(col("id") +: col("vec") +: attrs.map(col) :+
-        col("__cell").cast("long").as("cell"): _*)
-    val qp = KMeans.withCell2(
-        q.withColumn("__vq", KMeans.quantize(col("qvec"))), "__vq", cand)
-      .select(col("query_id"), col("qvec"),
-        explode(array(col("__cell").cast("long"),
-          col("__cell2").cast("long"))).as("probe"))
-    val scored = assigned.join(broadcast(qp),
-        col("cell") === col("probe") && col("id") =!= col("query_id"))
-      .select(col("query_id"), col("id"),
-        Similarity.cosineF(col("vec"), col("qvec")).as("score"))
-    val retrainedHits = hitsOf(Similarity.topKPerQuery(scored, k))
+    val assigned = cellOf(vq, cand, attrs)
+    val retrainedHits = hitsOf(Similarity.probeTopK(assigned, "id", "vec",
+      col("cell"), probeFrame(q, cand, 2), "query_id", "qvec",
+      col("__probes"), k))
     val pre = RetrainOutcome(nExact, frozenHits, retrainedHits,
       swapped = false)
     val doSwap = pre.retrainedRecall - pre.frozenRecall > threshold
@@ -553,17 +544,26 @@ object AnnIndex {
       scoredAgainst(spark, name, qp, predicate, None), k)
   }
 
-  /** (query_id, qvec, probe): each query exploded over its `nProbe`
-    * nearest cells under `cents` — the probe side of every index
+  /** (query_id, qvec, __probes): each query's `nProbe` nearest cells
+    * under `cents`, nearest first — the probe side of every index
     * search. */
   private def probeFrame(queries: DataFrame,
       cents: Array[Array[Double]], nProbe: Int): DataFrame =
-    KMeans.withCellN(
+    KMeans.nearestCells(
         queries.withColumn("__vq", KMeans.quantize(col("qvec"))),
         "__vq", cents, nProbe)
       .select(col("query_id"), col("qvec"),
-        explode(array((0 until nProbe)
-          .map(i => col(s"__probe$i").cast("long")): _*)).as("probe"))
+        KMeans.probeList(nProbe).as("__probes"))
+
+  /** (query_id, pidx, probe): the queries' (query_id, qvec) `nProbe`
+    * nearest cells of the published index, one row per probe with its
+    * rank `pidx` — the p-probe set is the prefix `pidx < p`, so one
+    * frame serves every point of an nProbe curve. */
+  def rankedProbes(spark: SparkSession, name: String, queries: DataFrame,
+      nProbe: Int): DataFrame =
+    probeFrame(queries, loadCentroids(spark, name), nProbe)
+      .select(col("query_id"), // outer: see Similarity.probeRows
+        posexplode_outer(col("__probes")).as(Seq("pidx", "probe")))
 
   /** Raw (query_id, id, score) candidate scores of the probed-cell
     * postings search — the shared scoring leg of [[searchTopK]] and
@@ -576,17 +576,14 @@ object AnnIndex {
       excludeIds: Option[DataFrame]): DataFrame = {
     // bounded collect: ≤ k probed cell VALUES — this literal list is
     // what turns the postings scan into a PartitionFilters-pruned read
-    val probed = qp.select(col("probe")).distinct()
-      .collect().map(_.getLong(0))
+    val probed = Similarity.probeRows(qp, "query_id", "qvec",
+        col("__probes"))
+      .select(col("__probe")).distinct().collect().map(_.getLong(0))
     val posts0 = predicate.foldLeft(
       spark.table(postingsTable(name)))(_ filter _)
     val posts = excludeIds.foldLeft(posts0)((p, ex) =>
       p.join(broadcast(ex.select(col("id"))), Seq("id"), "left_anti"))
-    posts
-      .filter(col("cell").isin(probed: _*))
-      .join(broadcast(qp),
-        col("cell") === col("probe") && col("id") =!= col("query_id"))
-      .select(col("query_id"), col("id"),
-        Similarity.cosineF(col("vec"), col("qvec")).as("score"))
+    Similarity.probeScores(posts.filter(col("cell").isin(probed: _*)),
+      "id", "vec", col("cell"), qp, "query_id", "qvec", col("__probes"))
   }
 }

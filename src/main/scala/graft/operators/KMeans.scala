@@ -69,21 +69,18 @@ object KMeans {
       }),
       lit(0.0), (acc, x) => acc + x)
 
-  /** Assignment-form threshold (VERDICT r12 #4): at k ≤ SmallK the
-    * column-per-centroid form below is measurably faster per row
-    * and its O(k²) plan-size term is negligible; above it the
+  /** Column-form threshold of [[nearestCells]] (VERDICT r12 #4): at
+    * k ≤ SmallK the column-per-centroid form is measurably faster per
+    * row and its O(k²) plan-size term is negligible; above it the
     * `typedlit`+HOF array is the only form that stays compilable (the
     * column fold read 54.9× at 10× data with corpus-sized k from plan
-    * compilation alone). 16, not 32 (ADVICE r13): [[Similarity
-    * .argminCell]]'s O(k²) when-chain at k = 32 exceeded Janino's
-    * method limit (observed InternalCompilerException → interpreted
-    * fallback — correct but slower than the HOF form it displaced,
-    * plus a failed-compile log storm); k = 16 keeps the generated
-    * argmin at ~256 branches, well inside the limit, and every
-    * production column-form call site is k ≤ 16 (KmK = IvfCells = 8).
-    * Distances are bit-identical on both sides — the same [[distTo]]
-    * fold term sequence — so every consumer, spec, and oracle is
-    * form-agnostic (KMeansSpec pins equality across the threshold). */
+    * compilation alone). 16, not 32 (ADVICE r13): the column form's
+    * O(k²) argmin when-chain at k = 32 exceeded Janino's method limit
+    * (observed InternalCompilerException → interpreted fallback —
+    * correct but slower than the HOF form it displaced, plus a
+    * failed-compile log storm); k = 16 keeps the generated argmin at
+    * ~256 branches, well inside the limit, and every production
+    * column-form call site is k ≤ 16 (KmK = IvfCells = 8). */
   private[graft] val SmallK = 16
 
   /** TEST-ONLY escape hatch (same class as the publish `crashAfter` fault
@@ -92,19 +89,6 @@ object KMeans {
     * production paths; leaving it on merely costs speed, never
     * correctness (the equality is the property under test). */
   private[graft] var forceHof: Boolean = false
-
-  private def useCols(k: Int): Boolean = k <= SmallK && !forceHof
-
-  /** Small-k helper: all k distance columns `__kd0..__kd{k-1}` added
-    * in ONE projection (a per-centroid `withColumn` fold would
-    * re-analyze the growing projection k times — the O(k²) analyzer
-    * trap this file already hit once). */
-  private def withDistCols(df: DataFrame, vqCol: String,
-      cents: Array[Array[Double]]): DataFrame =
-    df.withColumns(
-      cents.zipWithIndex.map { case (c, m) =>
-        s"__kd$m" -> distTo(col(vqCol), c)
-      }.toMap)
 
   /** (distance, cell) structs for every centroid as ONE row-local
     * array expression: the centroid table is a single `typedlit`
@@ -127,121 +111,64 @@ object KMeans {
           lit(0.0), (acc, x) => acc + x).as("d"),
         m.as("m")))
 
-  /** Appends `__cell` (first-wins argmin assignment) and `__kdist`
-    * (the min distance) for the given centroid table. Form picked by
-    * k (see [[SmallK]]); identical output either way. */
-  def withCellDist(df: DataFrame, vqCol: String,
-      cents: Array[Array[Double]]): DataFrame = {
-    val k = cents.length
-    if (useCols(k)) {
-      withDistCols(df, vqCol, cents)
-        .withColumn("__cell",
-          Similarity.argminCell(k, m => col(s"__kd$m")))
-        .withColumn("__kdist",
-          if (k == 1) col("__kd0")
-          else least((0 until k).map(m => col(s"__kd$m")): _*))
-        .drop((0 until k).map(m => s"__kd$m"): _*)
-    } else {
-      val best = array_min(distStructs(col(vqCol), cents))
-      df.withColumn("__cell", best.getField("m"))
-        .withColumn("__kdist", best.getField("d"))
-    }
-  }
-
-  /** [[withCellDist]] plus `__kdist2`: the distance to the BEST OTHER
-    * cell (the runner-up of the same first-wins argmin — on a tie at
-    * the minimum the runner-up carries the tied distance, exactly like
-    * the rk=2 row of the oracle's `ORDER BY dist, cell` window). The
-    * silhouette's b-term. */
-  def withCellDist2(df: DataFrame, vqCol: String,
-      cents: Array[Array[Double]]): DataFrame = {
-    val k = cents.length
-    require(k >= 2, "runner-up distance needs k >= 2")
-    if (useCols(k)) {
-      val withD = withDistCols(df, vqCol, cents)
-      val cell = Similarity.argminCell(k, m => col(s"__kd$m"))
-      withD
-        .withColumn("__cell", cell)
-        .withColumn("__kdist",
-          least((0 until k).map(m => col(s"__kd$m")): _*))
-        .withColumn("__kdist2",
-          least((0 until k).map(m =>
-            when(col("__cell") === m, lit(Double.MaxValue))
-              .otherwise(col(s"__kd$m"))): _*))
-        .drop((0 until k).map(m => s"__kd$m"): _*)
-    } else {
-      val sorted = array_sort(distStructs(col(vqCol), cents))
-      df.withColumn("__cell", element_at(sorted, 1).getField("m"))
-        .withColumn("__kdist", element_at(sorted, 1).getField("d"))
-        .withColumn("__kdist2", element_at(sorted, 2).getField("d"))
-    }
-  }
-
-  /** [[withCellDist]] plus `__cell2` — the runner-up CELL id (the rk=2
-    * row of the oracle's `ORDER BY dist, cell` window: among the cells
-    * other than the winner, lowest distance, ties → lowest cell). The
-    * second probe of a 2-probe IVF search ([[AnnIndex.topK]]). */
-  def withCell2(df: DataFrame, vqCol: String,
-      cents: Array[Array[Double]]): DataFrame = {
-    val k = cents.length
-    require(k >= 2, "a second probe needs k >= 2")
-    if (useCols(k)) {
-      withDistCols(df, vqCol, cents)
-        .withColumn("__cell",
-          Similarity.argminCell(k, m => col(s"__kd$m")))
-        .withColumn("__cell2",
-          Similarity.argminCell(k, m =>
-            when(col("__cell") === m, lit(Double.MaxValue))
-              .otherwise(col(s"__kd$m"))))
-        .drop((0 until k).map(m => s"__kd$m"): _*)
-    } else {
-      val sorted = array_sort(distStructs(col(vqCol), cents))
-      df.withColumn("__cell", element_at(sorted, 1).getField("m"))
-        .withColumn("__cell2", element_at(sorted, 2).getField("m"))
-    }
-  }
-
-  /** [[withCell2]] generalized: appends `__probe0..__probe{n-1}` — the
-    * n nearest cells per row, in the oracle's `ORDER BY dist, cell`
-    * window order (probe i+1 re-runs the same first-wins argmin with
-    * all previously chosen cells masked to MaxValue, so ties keep
-    * resolving to the lowest cell id). `withCellN(n = 2)`'s probes are
-    * exactly (`__cell`, `__cell2`) of [[withCell2]] — the 2-probe
-    * consumers' oracle contracts are unchanged by construction.
+  /** The one assignment kernel: appends `__probe0..__probe{n-1}` (int
+    * cells) and `__pdist0..__pdist{n-1}` (their distances) — each row's
+    * `n` nearest cells in the oracle's `ORDER BY dist, cell` window
+    * order, so ties resolve to the lowest cell and the lists for
+    * different `n` are prefixes of one another. `n = 1` is the
+    * first-wins argmin assignment; `__pdist1` is the silhouette's
+    * runner-up distance (on a tie at the minimum it carries the tied
+    * distance, like the oracle's rk=2 row) and `__probe1` the second
+    * probe of a 2-probe IVF search. Callers select what they need;
+    * column pruning drops the rest.
     *
-    * Form note (the r13 q259 regression, bisected r14): the column
-    * form is kept ONLY for n ≤ 2. Probe i's masked argmin references
-    * every `__kd` column O(k) times, and after projection collapse
-    * each reference inlines the full 64-dim distance fold — the
-    * collapsed plan carries O(k² · n) fold copies, which at n = 8
-    * measured 14.8 s vs the sorted-array form's 11.6 s on isolated
-    * q259 (the HOF form computes the k distances ONCE into one sorted
-    * array and serves every probe from it). At n ≤ 2 the column form
-    * stays the winner (the q247/q99 paths, flat in r13). */
-  def withCellN(df: DataFrame, vqCol: String,
+    * Two forms, bit-identical (the same [[distTo]] fold terms;
+    * KMeansSpec pins equality across the threshold):
+    *  - the sorted (dist, cell) array ([[distStructs]]; `array_min` at
+    *    n = 1): the k distances are computed ONCE and serve every
+    *    probe — the form everywhere except below;
+    *  - column-per-centroid, ONLY for k ≤ [[SmallK]] and n ≤ 2: probe
+    *    i+1 is the first-wins argmin with the chosen cells masked.
+    *    Measured faster there (r12–r14: the q99/q247 paths, flat in
+    *    r13). Beyond n = 2 it loses: each masked argmin references
+    *    every `__kd` column O(k) times, and after projection collapse
+    *    each reference inlines the full 64-dim fold — O(k² · n) fold
+    *    copies, which at n = 8 measured 14.8 s vs the sorted form's
+    *    11.6 s on isolated q259 (the r13 regression, bisected r14). */
+  def nearestCells(df: DataFrame, vqCol: String,
       cents: Array[Array[Double]], n: Int): DataFrame = {
     val k = cents.length
     require(n >= 1 && n <= k, "1 <= nProbe <= cells")
-    if (useCols(k) && n <= 2) {
-      val withD = withDistCols(df, vqCol, cents)
-      val staged = (0 until n).foldLeft(withD) { (d, i) =>
-        val masked: Int => Column = m => {
-          val prior = (0 until i).map(j => col(s"__probe$j") === m)
-          if (prior.isEmpty) col(s"__kd$m")
-          else when(prior.reduce(_ || _), lit(Double.MaxValue))
-            .otherwise(col(s"__kd$m"))
-        }
-        d.withColumn(s"__probe$i", Similarity.argminCell(k, masked))
+    if (k <= SmallK && n <= 2 && !forceHof) {
+      // all k distance columns in ONE projection (a per-centroid
+      // `withColumn` fold would re-analyze the growing projection k
+      // times — the O(k²) analyzer trap this file already hit once)
+      val kd: Int => Column = m => col(s"__kd$m")
+      val withD = df.withColumns(cents.zipWithIndex.map { case (c, m) =>
+        s"__kd$m" -> distTo(col(vqCol), c) }.toMap)
+      val dists = (0 until n).map { i =>
+        val ds = (0 until k).map(Similarity.maskChosen(i, kd))
+        (if (k == 1) ds.head else least(ds: _*)).as(s"__pdist$i")
       }
-      staged.drop((0 until k).map(m => s"__kd$m"): _*)
+      val probed = Similarity.argminProbes(withD, k, n, kd)
+      probed.select(col("*") +: dists: _*)
+        .drop((0 until k).map(m => s"__kd$m"): _*)
     } else {
-      val sorted = array_sort(distStructs(col(vqCol), cents))
-      (0 until n).foldLeft(df) { (d, i) =>
-        d.withColumn(s"__probe$i",
-          element_at(sorted, i + 1).getField("m"))
-      }
+      val ds = distStructs(col(vqCol), cents)
+      val nth: Int => Column =
+        if (n == 1) _ => array_min(ds)
+        else i => element_at(array_sort(ds), i + 1)
+      df.select(col("*") +:
+        ((0 until n).map(i => nth(i).getField("m").as(s"__probe$i")) ++
+          (0 until n).map(i => nth(i).getField("d").as(s"__pdist$i"))): _*)
     }
   }
+
+  /** `array(__probe0, ..., __probe{n-1})` as longs: the probe list of a
+    * [[nearestCells]] / [[Similarity.ivfProbes]] frame, in probe
+    * order. */
+  private[graft] def probeList(n: Int): Column =
+    array((0 until n).map(i => col(s"__probe$i").cast("long")): _*)
 
   /** `iters` Lloyd's iterations from the deterministic init; returns
     * the final k×dims centroid table. Each iteration: one distributed
@@ -275,11 +202,11 @@ object KMeans {
       iters: Int): Array[Array[Double]] = {
     var cents = initCentroids(k, dims)
     for (_ <- 0 until iters) {
-      val assigned = withCellDist(vq, vqCol, cents)
+      val assigned = nearestCells(vq, vqCol, cents, 1)
       val aggs = count(lit(1)).as("__n") +:
         (0 until dims).map(d =>
           sum(element_at(col(vqCol), d + 1)).as(s"__s$d"))
-      val rows = assigned.groupBy(col("__cell"))
+      val rows = assigned.groupBy(col("__probe0"))
         .agg(aggs.head, aggs.tail: _*)
         .collect() // bounded: ≤ k rows of k×(dims+2) scalars
       val next = cents.map(_.clone())
@@ -297,7 +224,7 @@ object KMeans {
         // seed so no two cells ever receive the same reseed (they
         // would tie forever, first-wins starving the higher cell)
         val seeds = assigned
-          .select(col(vqCol).as("__v"), col("__kdist").as("__d"))
+          .select(col(vqCol).as("__v"), col("__pdist0").as("__d"))
           .distinct()
           .orderBy(col("__d").desc, col("__v").asc)
           .limit(empty.size)

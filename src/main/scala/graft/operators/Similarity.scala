@@ -19,9 +19,10 @@ import graft.functions.Functions._
   * per-candidate scoring streams map-side; top-k per query uses a
   * partial-aggregatable Aggregator, so only `k` rows per (query ×
   * input-partition) ever reach the shuffle — NOT a window over all
-  * n×|Q| scored pairs. The LSH variant prunes the scored set itself:
-  * sign-buckets from deterministic hash-derived hyperplanes, candidates
-  * joined within buckets only.
+  * n×|Q| scored pairs. The ANN variants prune the scored set itself
+  * through one candidate-probe kernel ([[probeScores]]): corpus rows
+  * keyed by a sign-bucket or coarse cell, candidates joined within the
+  * query's probed keys only.
   */
 object Similarity {
 
@@ -153,6 +154,53 @@ object Similarity {
         round(col("n.scores"), 6).as("cosine"))
   }
 
+  /** The candidate-probe kernel under every ANN search. Each query is
+    * exploded over `probes` (an array of DISTINCT long keys, evaluated
+    * on `queries`) and broadcast into an equi-join with the corpus rows
+    * whose `key` (a long, evaluated on `corpus`) equals a probe,
+    * self-matches excluded; candidates are scored with exact
+    * [[cosineF]]. A corpus row carries one key, so candidates need no
+    * dedup. The searches differ only in key and probes: LSH keys by
+    * [[lshBucket]] (multi-probe adds its Hamming-1 flips), hash IVF by
+    * [[ivfProbes]], trained IVF by [[KMeans.nearestCells]]. Returns raw
+    * (query_id, id, score) — the input of [[topKPerQuery]]. */
+  private[operators] def probeScores(corpus: DataFrame, idCol: String,
+      vecCol: String, key: Column, queries: DataFrame, queryIdCol: String,
+      queryVecCol: String, probes: Column): DataFrame = {
+    val qp = probeRows(queries, queryIdCol, queryVecCol, probes)
+    corpus.select(col(idCol).as("id"), col(vecCol).as("__vec"),
+        key.cast("long").as("__key"))
+      .join(broadcast(qp),
+        col("__key") === col("__probe") && col("id") =!= col("query_id"))
+      .select(col("query_id"), col("id"),
+        cosineF(col("__vec"), col("__qvec")).as("score"))
+  }
+
+  /** (query_id, __qvec, __probe): each query exploded over its probe
+    * keys. `explode_outer`, not `explode`: over an array ATTRIBUTE the
+    * optimizer infers `size(probes) > 0` below the generator and pushes
+    * it through the projections that define the probes, inlining the
+    * staged argmin chain into the filter at every reference — measured
+    * 53,777 expression nodes and ~30 s of planning for 2 probes over 8
+    * cells, against 632 nodes with the probes exploded in place. A
+    * null probe (from an empty list) matches no key, so the outer form
+    * changes no result. */
+  private[operators] def probeRows(queries: DataFrame, queryIdCol: String,
+      queryVecCol: String, probes: Column): DataFrame =
+    queries.select(col(queryIdCol).as("query_id"),
+      col(queryVecCol).as("__qvec"),
+      explode_outer(probes.cast("array<bigint>")).as("__probe"))
+
+  /** Approximate top-k through the candidate-probe kernel
+    * ([[probeScores]]): (query_id, rank, neighbor_id, cosine), rank
+    * 1..k by (cosine desc, neighbor_id asc) among the probed
+    * candidates. */
+  def probeTopK(corpus: DataFrame, idCol: String, vecCol: String,
+      key: Column, queries: DataFrame, queryIdCol: String,
+      queryVecCol: String, probes: Column, k: Int): DataFrame =
+    topKPerQuery(probeScores(corpus, idCol, vecCol, key, queries,
+      queryIdCol, queryVecCol, probes), k)
+
   /** Driver-side mirror of the hash-weight formula the SQL oracles
     * inline: `(md5_60bit(tag) mod 1001 − 500) / 500` ∈ [-1, 1].
     * Bit-identical to the old Catalyst form
@@ -188,31 +236,26 @@ object Similarity {
     * vectors (components hash-derived in [-1, 1], like the LSH planes),
     * each vector assigned to the centroid with the max dot product
     * (first-wins on ties). One literal array per centroid (see
-    * [[hashWeight]]); the argmax runs over MATERIALIZED dot columns so
-    * each centroid dot is computed once per row. */
+    * [[hashWeight]]). */
   def centroidWeights(m: Int, dims: Int): Column =
     typedlit((0 until dims).map(d => hashWeight(s"centroid:$m:$d")))
 
-  /** First-wins argmax over `cells` dot columns supplied by `d`. */
-  private def argmaxCell(cells: Int, d: Int => Column): Column =
-    (0 until cells - 1).foldRight(lit(cells - 1): Column) { (m, acc) =>
-      val later = (m + 1 until cells).map(d)
-      val laterMax =
-        if (later.size == 1) later.head else greatest(later: _*)
-      when(d(m) >= laterMax, lit(m)).otherwise(acc)
-    }
-
-  /** Appends `__cell` — the assigned coarse cell id. All dot columns
-    * land in ONE projection (a per-centroid `withColumn` fold would
-    * re-analyze the growing plan `cells` times — the O(k²) analyzer
-    * trap KMeans.withDistCols names). */
-  def withIvfCell(df: DataFrame, vecCol: String, cells: Int,
-      dims: Int): DataFrame = {
-    val withDots = df.withColumns(
+  /** Appends `__probe0..__probe{n-1}`: the `n` hash centroids with the
+    * largest dot product, best first — `n = 1` is the coarse cell
+    * assignment, larger `n` the multi-probe list. The argmax is
+    * [[argminProbes]] over NEGATED dots: IEEE negation is exact and
+    * both chains resolve ties to the lowest cell, so the picks equal
+    * the oracles' first-wins argmax CASE chains (chosen cells masked
+    * to -1e308). The dots are MATERIALIZED columns, all in ONE
+    * projection (a per-centroid `withColumn` fold would re-analyze the
+    * growing plan `cells` times — the O(k²) analyzer trap), so each is
+    * computed once per row. */
+  private[graft] def ivfProbes(df: DataFrame, vecCol: String, cells: Int,
+      dims: Int, n: Int): DataFrame = {
+    val negDots = df.withColumns(
       (0 until cells).map(m =>
-        s"__dot$m" -> dotF(col(vecCol), centroidWeights(m, dims))).toMap)
-    withDots
-      .withColumn("__cell", argmaxCell(cells, m => col(s"__dot$m")))
+        s"__dot$m" -> -dotF(col(vecCol), centroidWeights(m, dims))).toMap)
+    argminProbes(negDots, cells, n, m => col(s"__dot$m"))
       .drop((0 until cells).map(m => s"__dot$m"): _*)
   }
 
@@ -247,6 +290,28 @@ object Similarity {
         if (later.size == 1) later.head else least(later: _*)
       when(d(m) <= laterMin, lit(m)).otherwise(acc)
     }
+
+  /** `d`, with the cells already chosen as `__probe0..__probe{i-1}`
+    * masked to MaxValue. */
+  private[operators] def maskChosen(i: Int, d: Int => Column)
+      : Int => Column = m => {
+    val prior = (0 until i).map(j => col(s"__probe$j") === m)
+    if (prior.isEmpty) d(m)
+    else when(prior.reduce(_ || _), lit(Double.MaxValue)).otherwise(d(m))
+  }
+
+  /** Appends `__probe0..__probe{n-1}`: the `n` cells with the lowest
+    * `d`, in (value, cell) order — probe i+1 re-runs the first-wins
+    * [[argminCell]] with every chosen cell masked, so ties keep
+    * resolving to the lowest cell id and the probe lists for
+    * different `n` are prefixes of one another. */
+  private[operators] def argminProbes(df: DataFrame, cells: Int, n: Int,
+      d: Int => Column): DataFrame = {
+    require(n >= 1 && n <= cells, "1 <= nProbe <= cells")
+    (0 until n).foldLeft(df) { (acc, i) =>
+      acc.withColumn(s"__probe$i", argminCell(cells, maskChosen(i, d)))
+    }
+  }
 
   /** Product quantization: each vector's `dims` components split into
     * `m` subvectors, each assigned (exact L2², first-wins argmin) to
@@ -319,19 +384,19 @@ object Similarity {
     val sub = dims / m
     // compressed index: coarse cell + PQ codes per corpus vector
     val coded = withPqCodes(
-      withIvfCell(
+      ivfProbes(
         vectors.select(col(idCol).as("vec_id"), col(vecCol).as("__v")),
-        "__v", cells, dims),
+        "__v", cells, dims, 1),
       "__v", m, codebook, dims)
-      .select(col("vec_id") +: col("__cell") +:
+      .select(col("vec_id") +: col("__probe0").as("__cell") +:
         (0 until m).map(s => col(s"code$s")): _*)
     // query side: cell probe + the m×k distance table, as m arrays —
     // layered withColumns like [[withPqCodes]] (identical expressions,
     // no per-column eager re-analysis)
-    val q0 = withIvfCell(
+    val q0 = ivfProbes(
       queries.select(col(queryIdCol).as("query_id"),
         col(queryVecCol).as("__q")),
-      "__q", cells, dims)
+      "__q", cells, dims, 1)
     val q1 = q0.withColumns(
       (0 until m).map(s =>
         s"__qsub$s" -> slice(col("__q"), s * sub + 1, sub)).toMap)
@@ -349,7 +414,7 @@ object Similarity {
         s"__qd$s" ->
           array((0 until codebook).map(j => col(s"__qd${s}_$j")): _*))
         .toMap)
-    val qSel = q.select(col("query_id") +: col("__cell").as("__qcell") +:
+    val qSel = q.select(col("query_id") +: col("__probe0").as("__qcell") +:
       (0 until m).map(s => col(s"__qd$s")): _*)
     val adist = (0 until m)
       .map(s => element_at(col(s"__qd$s"), col(s"code$s").cast("int") + 1))
@@ -365,122 +430,20 @@ object Similarity {
         round(-col("cosine"), 6).as("adist"))
   }
 
-  /** Appends `__probe0..__probe{nProbe-1}` — the top-`nProbe` cells by
-    * centroid dot product. Probe i+1 re-runs the same first-wins argmax
-    * with all previously chosen cells' dots masked to -1e308, so the
-    * probe sequence is deterministic and replayable in plain SQL. */
-  def withIvfProbes(df: DataFrame, vecCol: String, cells: Int,
-      dims: Int, nProbe: Int): DataFrame = {
-    require(nProbe >= 1 && nProbe <= cells, "1 <= nProbe <= cells")
-    val withDots = df.withColumns(
-      (0 until cells).map(m =>
-        s"__dot$m" -> dotF(col(vecCol), centroidWeights(m, dims))).toMap)
-    val staged = (0 until nProbe).foldLeft(withDots) { (d, i) =>
-      val masked: Int => Column = m => {
-        val prior = (0 until i).map(j => col(s"__probe$j") === m)
-        if (prior.isEmpty) col(s"__dot$m")
-        else when(prior.reduce(_ || _), lit(-1e308))
-          .otherwise(col(s"__dot$m"))
-      }
-      d.withColumn(s"__probe$i", argmaxCell(cells, masked))
-    }
-    staged.drop((0 until cells).map(m => s"__dot$m"): _*)
-  }
-
-  /** IVF multi-probe top-k: each query probes its top-`nProbe` coarse
-    * cells instead of one — the standard recall lever for IVF (a query
-    * near a cell boundary recovers the neighbors that landed just
-    * across it) at nProbe/cells of the corpus read. Cells are disjoint,
-    * so no candidate dedup is needed. */
-  def ivfTopKMultiProbe(vectors: DataFrame, idCol: String, vecCol: String,
-      queries: DataFrame, queryIdCol: String, queryVecCol: String,
-      k: Int, cells: Int, dims: Int, nProbe: Int): DataFrame = {
-    val binned = withIvfCell(vectors, vecCol, cells, dims)
-    val qb = withIvfProbes(queries, queryVecCol, cells, dims, nProbe)
-      .withColumn("__qcell", explode(array(
-        (0 until nProbe).map(i => col(s"__probe$i")): _*)))
-      .drop((0 until nProbe).map(i => s"__probe$i"): _*)
-    val scored = binned.join(broadcast(qb),
-        col("__cell") === col("__qcell") &&
-          col(idCol) =!= col(queryIdCol))
-      .select(col(queryIdCol).as("query_id"),
-        col(idCol).as("id"),
-        cosineF(col(vecCol), col(queryVecCol)).as("score"))
-    topKPerQuery(scored, k)
-  }
-
-  /** IVF approximate top-k: candidates are corpus vectors in the SAME
-    * coarse cell as the query (single-probe), exact cosine + top-k
-    * within the cell. The centroid-partitioned corpus is the classic
-    * inverted-file layout — at scale, cells map to partitions and a
-    * probe touches 1/cells of the data. */
+  /** Hash-IVF approximate top-k: corpus vectors keyed by their coarse
+    * cell, each query probing its `nProbe` best cells ([[ivfProbes]]).
+    * Single-probe is the classic inverted-file search — at scale cells
+    * map to partitions and a probe touches 1/cells of the data; more
+    * probes are the standard recall lever (a query near a cell
+    * boundary recovers the neighbors that landed just across it) at
+    * nProbe/cells of the corpus read. */
   def ivfTopK(vectors: DataFrame, idCol: String, vecCol: String,
       queries: DataFrame, queryIdCol: String, queryVecCol: String,
-      k: Int, cells: Int, dims: Int): DataFrame = {
-    val binned = withIvfCell(vectors, vecCol, cells, dims)
-    val qb = withIvfCell(queries, queryVecCol, cells, dims)
-      .withColumnRenamed("__cell", "__qcell")
-    val scored = binned.join(broadcast(qb),
-        col("__cell") === col("__qcell") &&
-          col(idCol) =!= col(queryIdCol))
-      .select(col(queryIdCol).as("query_id"),
-        col(idCol).as("id"),
-        cosineF(col(vecCol), col(queryVecCol)).as("score"))
-    topKPerQuery(scored, k)
-  }
-
-  /** TRAINED-IVF approximate top-k: like [[ivfTopK]], but cells come
-    * from a [[KMeans]]-trained centroid table instead of the
-    * hash-derived family — the recall lever the untrained layout
-    * leaves on the floor. Assignment uses the same quantized-L2 argmin
-    * the training loop used (so train and serve agree on boundaries);
-    * scoring within a cell is exact cosine. Plan shape is identical to
-    * the untrained path: centroids fold into the row expression, the
-    * cell join is equi, top-k is the partial-aggregatable Aggregator. */
-  def trainedIvfTopK(vectors: DataFrame, idCol: String, vecCol: String,
-      queries: DataFrame, queryIdCol: String, queryVecCol: String,
-      k: Int, cents: Array[Array[Double]]): DataFrame = {
-    def binned(df: DataFrame, vec: String) =
-      KMeans.withCellDist(
-          df.withColumn("__vq", KMeans.quantize(col(vec))), "__vq", cents)
-        .drop("__vq", "__kdist")
-    val b = binned(vectors, vecCol)
-    val qb = binned(queries, queryVecCol)
-      .withColumnRenamed("__cell", "__qcell")
-    val scored = b.join(broadcast(qb),
-        col("__cell") === col("__qcell") &&
-          col(idCol) =!= col(queryIdCol))
-      .select(col(queryIdCol).as("query_id"),
-        col(idCol).as("id"),
-        cosineF(col(vecCol), col(queryVecCol)).as("score"))
-    topKPerQuery(scored, k)
-  }
-
-  /** Multi-probe LSH top-k: each query probes its own sign-bucket PLUS
-    * every bucket at Hamming distance 1 (one flipped hyperplane) —
-    * `planes + 1` probes recover the neighbors lost to a single
-    * boundary flip, the dominant LSH miss mode. Probe buckets are
-    * pairwise distinct and each vector lives in exactly one bucket, so
-    * candidates need no dedup. */
-  def lshTopKMultiProbe(vectors: DataFrame, idCol: String, vecCol: String,
-      queries: DataFrame, queryIdCol: String, queryVecCol: String,
-      k: Int, planes: Int, dims: Int): DataFrame = {
-    val bucketed = vectors.withColumn("__bucket",
-      lshBucket(col(vecCol), planes, dims))
-    val qb = queries.withColumn("__qbucket",
-      lshBucket(col(queryVecCol), planes, dims))
-      .withColumn("__probe", explode(array(
-        (col("__qbucket") +: (0 until planes).map(p =>
-          col("__qbucket").bitwiseXOR(lit(1L << p)))): _*)))
-      .drop("__qbucket")
-    val scored = bucketed.join(broadcast(qb),
-        col("__bucket") === col("__probe") &&
-          col(idCol) =!= col(queryIdCol))
-      .select(col(queryIdCol).as("query_id"),
-        col(idCol).as("id"),
-        cosineF(col(vecCol), col(queryVecCol)).as("score"))
-    topKPerQuery(scored, k)
-  }
+      k: Int, cells: Int, dims: Int, nProbe: Int = 1): DataFrame =
+    probeTopK(ivfProbes(vectors, vecCol, cells, dims, 1), idCol, vecCol,
+      col("__probe0"),
+      ivfProbes(queries, queryVecCol, cells, dims, nProbe), queryIdCol,
+      queryVecCol, KMeans.probeList(nProbe), k)
 
   /** Embedding-cosine near-duplicate pairs: vectors in the same
     * hyperplane sign-bucket are paired (a < b) and kept when exact
@@ -501,26 +464,5 @@ object Similarity {
       .withColumn("__cos", cosineF(col("va"), col("vb")))
       .filter(col("__cos") >= threshold)
       .select(col("id_a"), col("id_b"), round(col("__cos"), 6).as("cosine"))
-  }
-
-  /** Approximate top-k: candidates are corpus vectors in the SAME
-    * hyperplane sign-bucket as the query (2^planes buckets); exact
-    * cosine + top-k within candidates only. Trades recall for pruning —
-    * the bucket join replaces the full scan, which is what survives a
-    * 100× corpus. */
-  def lshTopK(vectors: DataFrame, idCol: String, vecCol: String,
-      queries: DataFrame, queryIdCol: String, queryVecCol: String,
-      k: Int, planes: Int, dims: Int): DataFrame = {
-    val bucketed = vectors.withColumn("__bucket",
-      lshBucket(col(vecCol), planes, dims))
-    val qb = queries.withColumn("__qbucket",
-      lshBucket(col(queryVecCol), planes, dims))
-    val scored = bucketed.join(broadcast(qb),
-        col("__bucket") === col("__qbucket") &&
-          col(idCol) =!= col(queryIdCol))
-      .select(col(queryIdCol).as("query_id"),
-        col(idCol).as("id"),
-        cosineF(col(vecCol), col(queryVecCol)).as("score"))
-    topKPerQuery(scored, k)
   }
 }

@@ -866,8 +866,10 @@ FROM r WHERE rk <= $AnnK"""
       val v = Tables.embeddings(s, dir)
       val q = v.filter(col("vec_id") % TopkEvery === 0)
         .select(col("vec_id").as("query_id"), col("embedding").as("qvec"))
-      Similarity.lshTopK(v, "vec_id", "embedding", q, "query_id", "qvec",
-        AnnK, AnnPlanes, AnnDims)
+      Similarity.probeTopK(v, "vec_id", "embedding",
+        Similarity.lshBucket(col("embedding"), AnnPlanes, AnnDims),
+        q, "query_id", "qvec",
+        array(Similarity.lshBucket(col("qvec"), AnnPlanes, AnnDims)), AnnK)
     }
 
   val q30 = Query("q30_embedding_ann_lsh", annOracle) { (s, dir) =>
@@ -1384,7 +1386,8 @@ FROM r WHERE rk <= $AnnK"""
   }
 
   /** DuckDB: first-wins argmax CASE chain over per-cell dot expressions
-    * (the exact shape of `Similarity.argmaxCell`). */
+    * (the cell `Similarity.ivfProbes` picks, as the first-wins argmin
+    * over negated dots). */
   private def ivfChainCase(d: Int => String): String =
     (0 until IvfCells - 1).map { m =>
       val later = (m + 1 until IvfCells).map(d).mkString(", ")
@@ -1394,7 +1397,7 @@ FROM r WHERE rk <= $AnnK"""
 
   /** DuckDB: the top-2-cell multi-probe variant of q49's IVF oracle —
     * probe 2 re-runs the argmax with the chosen cell's dot masked to
-    * -1e308, exactly like `Similarity.withIvfProbes`. */
+    * -1e308 — the second probe of `Similarity.ivfProbes`. */
   private def ivfMultiProbeOracle: String = {
     val dotCols = (0 until IvfCells).map { m =>
       s"""list_reduce([e[i] * (((('0x' || substr(md5('centroid:$m:' ||
@@ -1500,13 +1503,17 @@ FROM rec"""
     }
     leg("ivf", ivfShared(s, dir))
       .unionByName(leg("ivf_multiprobe",
-        Similarity.ivfTopKMultiProbe(v, "vec_id", "embedding",
+        Similarity.ivfTopK(v, "vec_id", "embedding",
           q, "query_id", "qvec", IvfK, IvfCells, AnnDims, nProbe = 2)))
       .unionByName(leg("ivf_pq", ivfPqShared(s, dir)))
       .unionByName(leg("lsh", lshShared(s, dir)))
       .unionByName(leg("lsh_multiprobe",
-        Similarity.lshTopKMultiProbe(v, "vec_id", "embedding",
-          q, "query_id", "qvec", AnnK, AnnPlanes, AnnDims)))
+        Similarity.probeTopK(v, "vec_id", "embedding",
+          Similarity.lshBucket(col("embedding"), AnnPlanes, AnnDims),
+          q.withColumn("__qb",
+            Similarity.lshBucket(col("qvec"), AnnPlanes, AnnDims)),
+          "query_id", "qvec", array(col("__qb") +: (0 until AnnPlanes)
+            .map(p => col("__qb").bitwiseXOR(lit(1L << p))): _*), AnnK)))
   }
 
   // ------------------------------------------------------------ q254
@@ -1522,7 +1529,7 @@ FROM rec"""
     * into the q53 recall shape. `c` carries the full corpus with its
     * argmax cell (q49's assignment, label retained); `f` is the
     * filtered candidate set; probe 2 re-runs the argmax with probe 1
-    * masked, exactly like `Similarity.withIvfProbes`. */
+    * masked — the second probe of `Similarity.ivfProbes`. */
   private def filteredRecallOracle: String = {
     val dotCols = dIvfDotCols
     val p0Case = ivfChainCase(i => s"d$i")
@@ -1642,7 +1649,7 @@ FROM rec"""
         Similarity.ivfTopK(cand, "vec_id", "embedding",
           q, "query_id", "qvec", IvfK, IvfCells, AnnDims)))
       .unionByName(leg("ivf_prefilter_p2",
-        Similarity.ivfTopKMultiProbe(cand, "vec_id", "embedding",
+        Similarity.ivfTopK(cand, "vec_id", "embedding",
           q, "query_id", "qvec", IvfK, IvfCells, AnnDims, nProbe = 2)))
   }
 

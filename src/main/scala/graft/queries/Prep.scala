@@ -648,10 +648,10 @@ object Prep {
     import graft.operators.KMeans
     val vq = kmVqShared(s, dir)
     val cents = kmCentsShared(s, dir)
-    val g = KMeans.withCellDist(vq, "vq", cents)
-      .groupBy(col("__cell").cast("long").as("cell"))
+    val g = KMeans.nearestCells(vq, "vq", cents, 1)
+      .groupBy(col("__probe0").cast("long").as("cell"))
       .agg(count(lit(1)).as("n"),
-        sum(floor(col("__kdist") * lit(1e6))).cast("long").as("iq"))
+        sum(floor(col("__pdist0") * lit(1e6))).cast("long").as("iq"))
     val stats = s.createDataFrame(cents.zipWithIndex.toIndexedSeq.map {
       case (c, m) =>
         (m.toLong,
@@ -720,8 +720,8 @@ object Prep {
     import org.apache.spark.sql.expressions.Window
     val cents = kmCentsShared(s, dir)
     val assigned = graft.operators.KMeans
-      .withCellDist(kmVqShared(s, dir), "vq", cents)
-      .select(col("vec_id"), col("__cell").cast("long").as("cell"))
+      .nearestCells(kmVqShared(s, dir), "vq", cents, 1)
+      .select(col("vec_id"), col("__probe0").cast("long").as("cell"))
     val lab = Tables.embeddings(s, dir).select(col("vec_id"), col("label"))
     val cl = assigned.join(lab, "vec_id")
       .groupBy(col("cell"), col("label"))
@@ -806,13 +806,18 @@ object Prep {
     * identical serve-time plan shape). Training cost is shared with
     * q99 through the run-scoped centroid cache. */
   val q100 = Query("q100_trained_ivf_recall", trainedRecallOracle) { (s, dir) =>
-    import graft.operators.{InternalCache, Similarity}
+    import graft.operators.{InternalCache, KMeans, Similarity}
     val cents = kmCentsShared(s, dir)
     val v = Tables.embeddings(s, dir)
     val q = v.filter(col("vec_id") % Llm.TopkEvery === 0)
       .select(col("vec_id").as("query_id"), col("embedding").as("qvec"))
-    val trained = Similarity.trainedIvfTopK(v, "vec_id", "embedding",
-      q, "query_id", "qvec", Llm.IvfK, cents)
+    // trained cells: the same quantized-L2 argmin the training loop
+    // used (train and serve agree on boundaries), single probe
+    def cell(df: DataFrame, vec: String) = KMeans.nearestCells(
+      df.withColumn("__vq", KMeans.quantize(col(vec))), "__vq", cents, 1)
+    val trained = Similarity.probeTopK(cell(v, "embedding"), "vec_id",
+      "embedding", col("__probe0"), cell(q, "qvec"), "query_id", "qvec",
+      KMeans.probeList(1), Llm.IvfK)
     val exact = InternalCache.persist(Llm.bruteForceShared(s, dir)
       .filter(col("rank") <= Llm.IvfK)
       .select("query_id", "neighbor_id"))
@@ -1002,7 +1007,7 @@ object Prep {
 
   /** q259's oracle: the q255 chain with the probe window kept to
     * rk ≤ 8 (probe lists are prefixes of one another — the spec-pinned
-    * [[graft.operators.KMeans.withCellN]] property), two filtered
+    * [[graft.operators.KMeans.nearestCells]] property), two filtered
     * candidate sets, an exact filtered top-k per selectivity, and one
     * approximate top-k per (selectivity × nProbe) leg; every leg also
     * counts its candidate pairs and the brute-force bill, so the
@@ -1106,7 +1111,7 @@ object Prep {
     * cand_frac 1.0) — the endpoint that pins both columns. */
   val q259 = Query("q259_ann_nprobe_curve", annNprobeCurveOracle) {
     (s, dir) =>
-    import graft.operators.{AnnIndex, InternalCache, KMeans, Similarity}
+    import graft.operators.{AnnIndex, InternalCache, Similarity}
     val name = s"annc_idx_${math.abs(dir.hashCode)}"
     val emb = Tables.embeddings(s, dir)
     AnnIndex.build(s, emb, "vec_id", "embedding", name, KmK, KmDims,
@@ -1117,14 +1122,7 @@ object Prep {
     // the full 8-probe list per query, rank kept: the p-probe set is
     // its prefix (spec-pinned), so one frame serves every leg's
     // candidate-cost count. Persisted: read by 8 legs in one action.
-    val qpr = InternalCache.persist(
-      KMeans.withCellN(
-          q.withColumn("__vq", KMeans.quantize(col("qvec"))),
-          "__vq", AnnIndex.loadCentroids(s, name), KmK)
-        .select(col("query_id"),
-          posexplode(array((0 until KmK)
-            .map(i => col(s"__probe$i").cast("long")): _*))
-            .as(Seq("pidx", "probe"))))
+    val qpr = InternalCache.persist(AnnIndex.rankedProbes(s, name, q, KmK))
     def legsFor(selMax: Int): org.apache.spark.sql.DataFrame = {
       val f = posts.filter(col("label") < selMax)
       val exact = InternalCache.persist(
@@ -1776,10 +1774,10 @@ object Prep {
        |FROM sil GROUP BY 1""".stripMargin) { (s, dir) =>
     import graft.operators.KMeans
     val cents = kmCentsShared(s, dir)
-    val a2 = KMeans.withCellDist2(kmVqShared(s, dir), "vq", cents)
-    val aD = sqrt(col("__kdist"))
-    val bD = sqrt(col("__kdist2"))
-    val sil = a2.select(col("__cell").cast("long").as("cell"),
+    val a2 = KMeans.nearestCells(kmVqShared(s, dir), "vq", cents, 2)
+    val aD = sqrt(col("__pdist0"))
+    val bD = sqrt(col("__pdist1"))
+    val sil = a2.select(col("__probe0").cast("long").as("cell"),
       when(greatest(aD, bD) > 0,
         floor(((bD - aD) / greatest(aD, bD)) * lit(KMeans.Q))
           .cast("long"))

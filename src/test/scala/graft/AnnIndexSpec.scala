@@ -39,12 +39,12 @@ class AnnIndexSpec extends SparkSpec {
     // one-shot reference: assign EVERYTHING under the same frozen
     // centroids (the published table round-trips doubles bit-exactly)
     val cents = AnnIndex.loadCentroids(spark, name)
-    val ref = graft.operators.KMeans.withCellDist(
+    val ref = graft.operators.KMeans.nearestCells(
         emb.select(col("vec_id").as("id"), col("embedding").as("vec"))
           .withColumn("__vq",
             graft.operators.KMeans.quantize(col("vec"))),
-        "__vq", cents)
-      .select(col("id"), col("__cell").cast("long").as("cell"))
+        "__vq", cents, 1)
+      .select(col("id"), col("__probe0").cast("long").as("cell"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(postings(name) == ref)
 
@@ -88,11 +88,11 @@ class AnnIndexSpec extends SparkSpec {
       .select(col("cell")).distinct().count()
     assert(nCellsTotal > 2, "fixture degenerate: every vector in 2 cells")
     // candidates touched at most 2 of the >2 cells
-    val probedCells = graft.operators.KMeans.withCell2(
+    val probedCells = graft.operators.KMeans.nearestCells(
         q.withColumn("__vq",
           graft.operators.KMeans.quantize(col("qvec"))),
-        "__vq", AnnIndex.loadCentroids(spark, name))
-      .select(col("__cell").cast("long"), col("__cell2").cast("long"))
+        "__vq", AnnIndex.loadCentroids(spark, name), 2)
+      .select(col("__probe0").cast("long"), col("__probe1").cast("long"))
       .head()
     val cellsRead = spark.table(AnnIndex.postingsTable(name))
       .filter(col("cell").isin(probedCells.getLong(0),
@@ -139,12 +139,12 @@ class AnnIndexSpec extends SparkSpec {
 
     // streamed state ≡ one-shot frozen assignment of everything
     val cents = AnnIndex.loadCentroids(spark, name)
-    val ref = graft.operators.KMeans.withCellDist(
+    val ref = graft.operators.KMeans.nearestCells(
         emb.select(col("vec_id").as("id"), col("embedding").as("vec"))
           .withColumn("__vq",
             graft.operators.KMeans.quantize(col("vec"))),
-        "__vq", cents)
-      .select(col("id"), col("__cell").cast("long").as("cell"))
+        "__vq", cents, 1)
+      .select(col("id"), col("__probe0").cast("long").as("cell"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(postings(name) == ref)
 
@@ -176,8 +176,8 @@ class AnnIndexSpec extends SparkSpec {
     val df = Seq((1L, Seq(0.4, 0.0)), (2L, Seq(-0.6, 0.0)))
       .toDF("id", "vec")
       .withColumn("__vq", graft.operators.KMeans.quantize(col("vec")))
-    val got = graft.operators.KMeans.withCell2(df, "__vq", cents)
-      .select(col("id"), col("__cell"), col("__cell2"))
+    val got = graft.operators.KMeans.nearestCells(df, "__vq", cents, 2)
+      .select(col("id"), col("__probe0"), col("__probe1"))
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getInt(2)))
       .toSet
     assert(got == Set((1L, 0, 1), (2L, 2, 0)))
@@ -371,20 +371,21 @@ class AnnIndexSpec extends SparkSpec {
     val q = emb.filter(col("vec_id") % 100 === 0)
       .select(col("vec_id").as("query_id"), col("embedding").as("qvec"))
       .withColumn("__vq", KMeans.quantize(col("qvec")))
-    // withCellN(2) ≡ (withCell2.__cell, withCell2.__cell2) — the
-    // contract every 2-probe oracle replays must be unchanged
-    val two = rows(KMeans.withCell2(q, "__vq", cents)
-      .select(col("query_id"), col("__cell").cast("long"),
-        col("__cell2").cast("long")))
-      .map(r => (r.getLong(0), (r.getLong(1), r.getLong(2)))).toMap
-    val n2 = rows(KMeans.withCellN(q, "__vq", cents, 2)
-      .select(col("query_id"), col("__probe0").cast("long"),
-        col("__probe1").cast("long")))
-      .map(r => (r.getLong(0), (r.getLong(1), r.getLong(2)))).toMap
+    // the 2-probe contract every 2-probe oracle replays (nearest +
+    // rk=2 runner-up) is the same in both assignment forms: the column
+    // form (K <= SmallK, n = 2) and the sorted-array form
+    def probes2(): Map[Long, (Long, Long)] =
+      rows(KMeans.nearestCells(q, "__vq", cents, 2)
+        .select(col("query_id"), col("__probe0").cast("long"),
+          col("__probe1").cast("long")))
+        .map(r => (r.getLong(0), (r.getLong(1), r.getLong(2)))).toMap
+    val two = probes2()
+    KMeans.forceHof = true
+    val n2 = try probes2() finally KMeans.forceHof = false
     assert(n2 == two)
     // probe lists are prefixes of one another (the same window walked
     // further), and all distinct
-    val n4 = rows(KMeans.withCellN(q, "__vq", cents, 4)
+    val n4 = rows(KMeans.nearestCells(q, "__vq", cents, 4)
       .select(col("query_id") +: (0 until 4)
         .map(i => col(s"__probe$i").cast("long")): _*))
       .map(r => (r.getLong(0), (0 until 4).map(i => r.getLong(i + 1))))
@@ -598,10 +599,10 @@ class AnnIndexSpec extends SparkSpec {
     assert(got.nonEmpty)
     assert(got.forall { case (_, id, _) => expected(id) < 3 })
     // equals pre-filtering the probed cells' candidates exactly
-    val pc = KMeans.withCell2(
+    val pc = KMeans.nearestCells(
         q.withColumn("__vq", KMeans.quantize(col("qvec"))),
-        "__vq", AnnIndex.loadCentroids(spark, name))
-      .select(col("__cell").cast("long"), col("__cell2").cast("long"))
+        "__vq", AnnIndex.loadCentroids(spark, name), 2)
+      .select(col("__probe0").cast("long"), col("__probe1").cast("long"))
       .head()
     val cand = spark.table(AnnIndex.postingsTable(name))
       .filter(col("cell").isin(pc.getLong(0), pc.getLong(1)) &&

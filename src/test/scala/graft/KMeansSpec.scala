@@ -53,22 +53,23 @@ class KMeansSpec extends SparkSpec {
     df.unpersist()
   }
 
-  test("withCellDist2 yields the runner-up distance; ties carry the " +
+  test("nearestCells yields the runner-up distance; ties carry the " +
       "tied distance") {
     val cents = Array(Array(0.0, 0.0, 0.0, 0.0),
       Array(10.0, 0.0, 0.0, 0.0))
     // point at x=1: own cell 0 (d²=1), runner-up cell 1 (d²=81)
-    val r = rows(KMeans.withCellDist2(
-      vecs(Seq((1L, Seq(1.0, 0.0, 0.0, 0.0)))), "vq", cents)).head
-    assert(r.getAs[Int]("__cell") == 0)
-    assert(r.getAs[Double]("__kdist") == 1.0)
-    assert(r.getAs[Double]("__kdist2") == 81.0)
+    val r = rows(KMeans.nearestCells(
+      vecs(Seq((1L, Seq(1.0, 0.0, 0.0, 0.0)))), "vq", cents, 2)).head
+    assert(r.getAs[Int]("__probe0") == 0)
+    assert(r.getAs[Double]("__pdist0") == 1.0)
+    assert(r.getAs[Double]("__pdist1") == 81.0)
     // equidistant point at x=5: first-wins cell 0, runner-up ties at 25
-    val t = rows(KMeans.withCellDist2(
-      vecs(Seq((2L, Seq(5.0, 0.0, 0.0, 0.0)))), "vq", cents)).head
-    assert(t.getAs[Int]("__cell") == 0)
-    assert(t.getAs[Double]("__kdist") == 25.0)
-    assert(t.getAs[Double]("__kdist2") == 25.0)
+    val t = rows(KMeans.nearestCells(
+      vecs(Seq((2L, Seq(5.0, 0.0, 0.0, 0.0)))), "vq", cents, 2)).head
+    assert(t.getAs[Int]("__probe0") == 0)
+    assert(t.getAs[Int]("__probe1") == 1)
+    assert(t.getAs[Double]("__pdist0") == 25.0)
+    assert(t.getAs[Double]("__pdist1") == 25.0)
   }
 
   /** Driver-side replay of [[KMeans.fit]]'s exact trajectory —
@@ -162,20 +163,17 @@ class KMeansSpec extends SparkSpec {
     for (k <- Seq(2, KMeans.SmallK, KMeans.SmallK + 1)) {
       val cents = KMeans.initCentroids(k, dims)
         .updated(0, Array(5.0, 5.0, 0.0, 0.0)) // makes the ties real
-      def all(): Seq[Seq[Any]] = {
-        val d2 = KMeans.withCellDist2(df, "vq", cents)
-        val pn = KMeans.withCellN(df, "vq", cents, math.min(4, k))
-        rows(KMeans.withCellDist(df, "vq", cents)
-          .join(d2.select(col("vec_id"), col("__kdist2"),
-            col("__cell").as("__cell_b")), Seq("vec_id"))
-          .join(pn.drop("__kdist", "__cell"), Seq("vec_id"))
-          .orderBy(col("vec_id"))).map(_.toSeq)
-      }
+      // n = 1 and 2 take the column form at k <= SmallK; n = 4 is
+      // always the sorted-array form
+      def all(): Seq[Seq[Any]] =
+        Seq(1, 2, math.min(4, k)).flatMap(n =>
+          rows(KMeans.nearestCells(df, "vq", cents, n)
+            .orderBy(col("vec_id"))).map(_.toSeq))
       val picked = all()
       KMeans.forceHof = true
       val hof = try all() finally KMeans.forceHof = false
       assert(picked == hof, s"forms diverged at k=$k")
-      assert(picked.nonEmpty && picked.size == data.size)
+      assert(picked.nonEmpty && picked.size == 3 * data.size)
     }
     df.unpersist()
     ()
@@ -187,8 +185,8 @@ class KMeansSpec extends SparkSpec {
       Array(9.0, 9.0, 9.0, 9.0),
       Array(1.0, 0.0, 0.0, 0.0), // exact match
       Array(1.0, 0.0, 0.0, 0.0)) // tie → first wins
-    val r = KMeans.withCellDist(df, "vq", cents).select("__cell", "__kdist")
-      .head()
+    val r = KMeans.nearestCells(df, "vq", cents, 1)
+      .select("__probe0", "__pdist0").head()
     assert(r.getInt(0) == 1)
     assert(r.getDouble(1) == 0.0)
   }

@@ -7,7 +7,14 @@ import org.scalatest.funsuite.AnyFunSuite
   * test wall-clock otherwise). UTC + tiny shuffle width to keep plans
   * deterministic and fast on test-sized data. */
 object TestSpark {
+  val warehouse = "/tmp/graft_test_warehouse"
+
   lazy val spark: SparkSession = {
+    // the catalog is in-memory, so table directories a stopped run left
+    // behind are orphans that would fail the next run's CREATE with
+    // LOCATION_ALREADY_EXISTS: start every run from an empty warehouse
+    org.apache.commons.io.FileUtils.deleteDirectory(
+      new java.io.File(warehouse))
     val s = SparkSession.builder()
       .master("local[2]")
       .appName("graft-test")
@@ -19,7 +26,7 @@ object TestSpark {
       // in microseconds; beyond that the distributed path is right.
       .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "256")
       .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir", "/tmp/graft_test_warehouse")
+      .config("spark.sql.warehouse.dir", warehouse)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")

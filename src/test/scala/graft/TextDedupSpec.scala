@@ -318,7 +318,7 @@ class TextDedupSpec extends SparkSpec {
     val cand = v.filter($"label" < 3)
     val q = v.filter($"vec_id" % 50 === 0)
       .select($"vec_id".as("query_id"), $"embedding".as("qvec"))
-    val pre2 = Similarity.ivfTopKMultiProbe(cand, "vec_id", "embedding",
+    val pre2 = Similarity.ivfTopK(cand, "vec_id", "embedding",
       q, "query_id", "qvec", 3, 8, 64, nProbe = 2)
     val offLabel = pre2.join(
       v.select($"vec_id".as("neighbor_id"), $"label"), Seq("neighbor_id"))
