@@ -22,7 +22,7 @@ sbt -batch compile >/dev/null 2>&1
 : > /tmp/bench_isolated_parts.txt
 for q in $TOP; do
   echo "[bench_round] isolated: $q" >&2
-  SPARK_GRAFT_BENCH_ONLY="$q" sbt -batch "runMain graft.Bench" >/dev/null 2>&1
+  SPARK_GRAFT_ONLY="$q" sbt -batch "runMain graft.Bench" >/dev/null 2>&1
   python3 - "$q" <<'EOF'
 import json, sys
 d = json.load(open('target/bench.json'))

@@ -21,7 +21,7 @@ export SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-32}"
 PANEL="q109_stream_interval_join,q111_pagerank,q148_bpe_encode,q134_dedup_method_recall,q17_sessionize,q8_running_total,q63_scd2_merge,q179_bfs_reach,q135_tfidf_cosine_pairs,q216_bootstrap_ci"
 
 echo "[noise_panel] benching panel (one JVM, reps 3)" >&2
-SPARK_GRAFT_BENCH_ONLY="$PANEL" sbt -batch "runMain graft.Bench" >/dev/null 2>&1
+SPARK_GRAFT_ONLY="$PANEL" sbt -batch "runMain graft.Bench" >/dev/null 2>&1
 
 python3 - "$N" <<'EOF'
 import glob, json, statistics, sys

@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main. Methodology (from r4 on):
   *
   *  - `reps` full SWEEPS over all queries in sorted-name order; the
@@ -23,53 +21,22 @@ import org.apache.spark.sql.SparkSession
   *    first, qNN-prefix keys, 3-decimal values) small enough that a
   *    tail-limited log capture cannot truncate it — r3's full-name line
   *    exceeded the driver's capture window and beheaded the artifact.
+  *
+  * `SPARK_GRAFT_ONLY=<q,…>` restricts the sweep (isolated medians);
+  * `SPARK_GRAFT_BENCH_REPS` sets the sweep count (default 3).
   */
 object Bench {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val sfDir = Tool.sfDir("/root/testdata/sf0.1")
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // local-mode partition DISCOVERY: listing an 80-partition month
-      // table as a distributed job costs ~0.2 s of scheduling per
-      // (refresh, read) pair - a composed build pays it dozens of times
-      // (measured, JobProfile q250). Up to 256 paths the driver lists
-      // in microseconds; beyond that the distributed path is right.
-      .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "256")
-      // the engine contract (SURVEY §1.2) and the NTZ→Timestamp coercion
-      // in Tables both assume UTC wall-clock ≡ instant; an unpinned
-      // session on a non-UTC machine would time a shifted workload
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // untimed warmup: representative queries absorb the one-off
-    // whole-stage-codegen/JIT infra startup (~5-10 s) that would
-    // otherwise land on whichever timed query happens to run first.
-    // q111 joins the list because the iterative-join codegen of the
+    val spark = Tool.start()
+    // q111 joins the warm-up because the iterative-join codegen of the
     // graph family showed residual first-run outliers (r6: 92.7 s vs
-    // 21 s median; r7 run B: 31 s vs 8 s) — its shared/internal caches
-    // are released below, so the timed run still rebuilds all data
-    // from cold and only the JIT warmth carries over
-    Seq("q1_pricing_summary", "q12_daily_anomalies",
-        "q111_pagerank").foreach { q =>
-      try { SparkEntry.queries(q)(spark, sfDir).count(); () }
-      catch { case _: Throwable => () }
-    }
-    graft.operators.InternalCache.release()
-    graft.operators.SharedFrames.release()
-    spark.catalog.clearCache()
+    // 21 s median; r7 run B: 31 s vs 8 s)
+    Tool.warm(spark, sfDir,
+      Seq("q1_pricing_summary", "q12_daily_anomalies", "q111_pagerank"))
 
-    // isolated-measurement mode: SPARK_GRAFT_BENCH_ONLY=q179_x,q53_y
-    // restricts the sweep to the named queries — the tool for separating
-    // in-sweep numbers (preceding queries' GC/codegen pressure included)
-    // from isolated medians when a regression needs an owner
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val names = SparkEntry.queries.keys.toSeq.sorted
-      .filter(n => only.forall(_.contains(n)))
+    val names = Tool.queryNames
     val times = scala.collection.mutable.Map[String, List[Double]]()
       .withDefaultValue(Nil)
     // a throwing query must surface as a recorded ERROR, never as its
@@ -82,12 +49,8 @@ object Bench {
         val t0 = System.nanoTime()
         val ok =
           try { fn(spark, sfDir).count(); true } catch { case e: Throwable =>
-            // strip EVERY control char plus the JSON specials — any raw
-            // char below U+0020 in the message would break json.load of the
-            // evidence file (the same contract Verify's escaper upholds)
             errors(name) = s"${e.getClass.getSimpleName}: " +
-              Option(e.getMessage).getOrElse("")
-                .replaceAll("""[\\"\p{Cntrl}]""", " ").take(200)
+              Tool.message(e).take(200)
             false
           }
         val elapsed = (System.nanoTime() - t0) / 1e9
@@ -106,16 +69,14 @@ object Bench {
         // contributing a bogus ~0.1 s median
         if (ok) times(name) = elapsed :: times(name)
       }
-      graft.operators.SharedFrames.release()
-      spark.catalog.clearCache()
-      System.gc()
+      Tool.cold(spark)
     }
     def median(xs: Seq[Double]): Double = {
       val s = xs.sorted
       if (s.size % 2 == 1) s(s.size / 2)
       else (s(s.size / 2 - 1) + s(s.size / 2)) / 2.0
     }
-    def r3(v: Double): String = f"$v%.3f"
+    import Tool.r3
     // queries with zero successful runs live in `errors` only
     val medians = names.filter(times(_).nonEmpty)
       .map(n => n -> median(times(n)))
@@ -129,7 +90,7 @@ object Bench {
         times(k).reverse.map(r3).mkString(", ")}]}"""
     }.mkString("{\n", ",\n", "\n  }")
     val errJson = errors
-      .map { case (k, v) => s"""    "$k": "$v"""" }
+      .map { case (k, v) => s"""    "$k": ${Tool.json(v)}""" }
       .mkString("{\n", ",\n", "\n  }")
     val fullJson =
       s"""{

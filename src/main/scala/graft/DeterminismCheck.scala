@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.Row
 
 /** Partitioning-invariance sweep: every registered query is executed
   * under two deliberately different physical configurations —
@@ -65,26 +65,10 @@ object DeterminismCheck {
   private val RowCap = 500000 // sf0.001 results are <= ~1.5k rows
 
   def main(args: Array[String]): Unit = {
-    val sfDir =
-      sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // local-mode partition DISCOVERY: listing an 80-partition month
-      // table as a distributed job costs ~0.2 s of scheduling per
-      // (refresh, read) pair - a composed build pays it dozens of times
-      // (measured, JobProfile q250). Up to 256 paths the driver lists
-      // in microseconds; beyond that the distributed path is right.
-      .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "256")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val names = SparkEntry.queries.keys.toSeq.sorted
-      .filter(n => only.forall(_.contains(n)))
+    val sfDir = Tool.sfDir("/root/testdata/sf0.001")
+    val cpus = Session.cpus.toString
+    val spark = Tool.start()
+    val names = Tool.queryNames
 
     // (shuffle.partitions, files.maxPartitionBytes): pass B's co-prime
     // reducer count re-deals every hash bucket and the 1 MiB splits
@@ -105,15 +89,13 @@ object DeterminismCheck {
         } catch { case e: Throwable =>
           out(name) = s"ERROR:${e.getClass.getSimpleName}"
           System.err.println(s"[determinism] $name ($label) threw: " +
-            Option(e.getMessage).getOrElse("").take(200))
+            Tool.message(e).take(200))
         }
         graft.operators.InternalCache.release()
       }
       // pass B must rebuild every shared intermediate under its own
       // layout — a pass-A cache surviving would hide real drift
-      graft.operators.SharedFrames.release()
-      spark.catalog.clearCache()
-      System.gc()
+      Tool.cold(spark)
       (label, out)
     }
     val (_, a) = hashes.head

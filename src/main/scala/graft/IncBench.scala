@@ -14,21 +14,8 @@ import org.apache.spark.sql.functions._
   * asymptote, is the evidence. Prints one JSON line. */
 object IncBench {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // local-mode partition DISCOVERY: listing an 80-partition month
-      // table as a distributed job costs ~0.2 s of scheduling per
-      // (refresh, read) pair - a composed build pays it dozens of times
-      // (measured, JobProfile q250). Up to 256 paths the driver lists
-      // in microseconds; beyond that the distributed path is right.
-      .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "256")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val sfDir = Tool.sfDir("/root/testdata/sf0.1")
+    val spark = Tool.start()
     if (sys.env.get("SPARK_GRAFT_INC_MODE").contains("warehouse")) {
       warehouse(spark, sfDir); spark.stop(); return
     }
@@ -60,19 +47,13 @@ object IncBench {
     val deltaRows = delta.count()
     val totalRows = src.count()
 
-    def time(f: => Unit): Double = {
-      val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-    }
+    import Tool.{r3, secs}
     graft.operators.InternalCache.release()
-    val tBase = time { CorpusBuild.run(spark, baseDir).count(); () }
+    val tBase = secs(CorpusBuild.run(spark, baseDir).count())
     graft.operators.InternalCache.release()
-    val tInc = time {
-      CorpusBuild.runIncremental(spark, baseDir, delta).count(); ()
-    }
+    val tInc = secs(CorpusBuild.runIncremental(spark, baseDir, delta).count())
     graft.operators.InternalCache.release()
-    val tFull = time { CorpusBuild.run(spark, fullDir).count(); () }
-
-    def r3(v: Double) = f"$v%.3f"
+    val tFull = secs(CorpusBuild.run(spark, fullDir).count())
     println(s"""{"metric":"incremental_corpus_build","rows_total":$totalRows,"rows_delta":$deltaRows,"sec_full_rebuild":${r3(tFull)},"sec_incremental_delta":${r3(tInc)},"sec_base_build":${r3(tBase)},"speedup_vs_rebuild":${r3(tFull / tInc)}}""")
     spark.stop()
   }
@@ -152,28 +133,16 @@ object IncBench {
     val deltaRows = oDelta.count() + eDelta.count()
     val affectedUsers = eDelta.select("user_id").distinct().count()
 
-    def time(f: => Unit): Double = {
-      val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-    }
+    import Tool.{r3, secs}
     graft.operators.InternalCache.release()
-    val tBase = time {
-      WarehouseBuild.runOn(spark, oBase, customer, eBase, "wib",
-        dimBuckets = dimBuckets).count()
-      ()
-    }
+    val tBase = secs(WarehouseBuild.runOn(spark, oBase, customer, eBase,
+      "wib", dimBuckets = dimBuckets).count())
     graft.operators.InternalCache.release()
-    val tInc = time {
-      WarehouseBuild.runIncremental(spark, "wib", oDelta, eDelta,
-        dimBuckets = dimBuckets).count()
-      ()
-    }
+    val tInc = secs(WarehouseBuild.runIncremental(spark, "wib", oDelta,
+      eDelta, dimBuckets = dimBuckets).count())
     graft.operators.InternalCache.release()
-    val tFull = time {
-      WarehouseBuild.runOn(spark, orders, customer, events, "wif",
-        dimBuckets = dimBuckets).count()
-      ()
-    }
-    def r3(v: Double) = f"$v%.3f"
+    val tFull = secs(WarehouseBuild.runOn(spark, orders, customer, events,
+      "wif", dimBuckets = dimBuckets).count())
     println(s"""{"metric":"incremental_warehouse_build","rows_total":$totalRows,"rows_delta":$deltaRows,"affected_users":$affectedUsers,"sec_full_rebuild":${r3(tFull)},"sec_incremental_delta":${r3(tInc)},"sec_base_build":${r3(tBase)},"speedup_vs_rebuild":${r3(tFull / tInc)}}""")
   }
 }

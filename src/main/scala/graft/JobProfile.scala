@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 
 /** Dev tool: run one registered query and print its Spark JOB
   * breakdown — id, wall duration, call site — sorted by cost. The
@@ -9,28 +8,11 @@ import org.apache.spark.sql.SparkSession
   * which actions. Usage: runMain graft.JobProfile <query> */
 object JobProfile {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // local-mode partition DISCOVERY: listing an 80-partition month
-      // table as a distributed job costs ~0.2 s of scheduling per
-      // (refresh, read) pair - a composed build pays it dozens of times
-      // (measured, JobProfile q250). Up to 256 paths the driver lists
-      // in microseconds; beyond that the distributed path is right.
-      .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "256")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val sfDir = Tool.sfDir("/root/testdata/sf0.1")
+    val spark = Tool.start()
     val name = args.headOption.getOrElse("q250_build_incremental")
-    // warmup absorbs codegen/JIT startup so the profile reflects the
-    // steady-state action costs
-    try { SparkEntry.queries("q1_pricing_summary")(spark, sfDir).count(); () }
-    catch { case _: Throwable => () }
-    graft.operators.InternalCache.release()
-    spark.catalog.clearCache()
+    // the profile should show the steady-state action costs
+    Tool.warm(spark, sfDir, Seq("q1_pricing_summary"))
 
     val starts = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
     val done = java.util.Collections.synchronizedList(
@@ -78,9 +60,7 @@ object JobProfile {
             exception: Exception): Unit = ()
       })
     graft.sources.MetaOps.reset()
-    val t0 = System.nanoTime()
-    SparkEntry.queries(name)(spark, sfDir).count()
-    val total = (System.nanoTime() - t0) / 1e9
+    val total = Tool.secs(SparkEntry.queries(name)(spark, sfDir).count())
     val meta = graft.sources.MetaOps.snapshot
     // listener events drain asynchronously
     Thread.sleep(2000)
@@ -90,10 +70,7 @@ object JobProfile {
     println(f"TOTAL ${total}%.2f s, jobs=${jobs.size}, job-time sum=$jobSum%.2f s (gap=${total - jobSum}%.2f s driver-side)")
     // the commit bill: driver-side catalog/metadata ops the query paid
     // (the q246/q258 scale axis — see sources/MetaOps.scala)
-    println("METAOPS " + (if (meta.isEmpty) "{}"
-      else meta.toSeq.sorted
-        .map { case (k, v) => s""""$k":$v""" }
-        .mkString("{", ",", "}")))
+    println("METAOPS " + Tool.jsonCounts(meta))
     jobs.sortBy(-_._2).take(40).foreach { case (id, d, site) =>
       println(f"  job $id%4d  $d%7.3f s  $site")
     }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** The nProbe recall/cost curve measured WHERE IT BITES (VERDICT r12
@@ -21,19 +20,9 @@ import org.apache.spark.sql.functions._
 object NprobeCurve {
 
   def main(args: Array[String]): Unit = {
-    val baseDir =
-      sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val baseDir = Tool.sfDir("/root/testdata/sf0.1")
     val mult = sys.env.getOrElse("SPARK_GRAFT_SCALE_MULT", "10").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.sources.parallelPartitionDiscovery.threshold",
-        "256")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Tool.start()
 
     import graft.operators.{AnnIndex, InternalCache, Similarity}
     val dir = s"/tmp/graft_scale_x$mult"

@@ -23,6 +23,7 @@ import org.apache.spark.sql.functions._
   * This harness NEVER feeds correctness oracles — it exists to measure
   * the scaling exponent of each pipeline. Usage:
   *   SPARK_GRAFT_SCALE_MULT=10 sbt "runMain graft.ScaleBench"
+  * (`SPARK_GRAFT_ONLY=q22_exact_dedup,hardneg_fixedq` restricts the run)
   * Prints one JSON line per (query, mult) and a final summary line with
   * the t(mult)/t(1) ratio per query.
   */
@@ -426,25 +427,17 @@ object ScaleBench {
     val spanDefault = CorpusBuild.curatedPartSpan
     val results = scala.collection.mutable.LinkedHashMap[String,
       (Double, Double)]()
-    def timeOne(name: String, body: => Unit): (Double, Map[String, Long]) = {
+    def timeOne(body: => Unit): (Double, Map[String, Long]) = {
       graft.sources.MetaOps.reset()
-      val t0 = System.nanoTime()
-      body
-      val e = (System.nanoTime() - t0) / 1e9
+      val e = Tool.secs(body)
       val meta = graft.sources.MetaOps.snapshot
-      graft.operators.InternalCache.release()
-      graft.operators.SharedFrames.release()
-      spark.catalog.clearCache()
-      System.gc()
+      Tool.cold(spark)
       (e, meta)
     }
     val eraseReq = spark.read.parquet(s"$dir/documents.parquet")
       .select(col("doc_id"))
       .filter(pmod(col("doc_id"), lit(CorpusBuild.EraseMod)) ===
         CorpusBuild.EraseRes)
-    // SPARK_GRAFT_SCALE_ONLY restricts this axis too (dev loop)
-    val onlyP = sys.env.get("SPARK_GRAFT_SCALE_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     for ((tag, mult) <- Seq(("p1", 1), ("p10", 10))) {
       sys.props("graft.corpus.partSpan") =
         math.max(1L, spanDefault / mult).toString
@@ -476,14 +469,13 @@ object ScaleBench {
             ("agg_fold_only_parts",
               () => aggFoldOnlyPrep(spark, dir, hourly = mult > 1),
               () => aggFoldOnlyBody(spark, dir)))
-            if onlyP.forall(_.contains(q))) {
+            if Tool.picked(q)) {
           prep()
-          val (t1, m1) = timeOne(q, body())
+          val (t1, m1) = timeOne(body())
           prep()
-          val (t2, m2) = timeOne(q, body())
+          val (t2, m2) = timeOne(body())
           val t = math.min(t1, t2)
-          val meta = (if (t1 <= t2) m1 else m2).toSeq.sorted
-            .map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
+          val meta = Tool.jsonCounts(if (t1 <= t2) m1 else m2)
           results(q) =
             if (mult == 1) (t, results.get(q).map(_._2).getOrElse(0.0))
             else (results.get(q).map(_._1).getOrElse(0.0), t)
@@ -499,25 +491,9 @@ object ScaleBench {
   }
 
   def main(args: Array[String]): Unit = {
-    val baseDir =
-      sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val baseDir = Tool.sfDir("/root/testdata/sf0.1")
     val mult = sys.env.getOrElse("SPARK_GRAFT_SCALE_MULT", "10").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // local-mode partition DISCOVERY: listing an 80-partition month
-      // table as a distributed job costs ~0.2 s of scheduling per
-      // (refresh, read) pair - a composed build pays it dozens of times
-      // (measured, JobProfile q250). Up to 256 paths the driver lists
-      // in microseconds; beyond that the distributed path is right.
-      .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "256")
-      // same UTC pin as Verify/Bench — the NTZ→Timestamp coercion and
-      // every date-bucketing query assume wall-clock ≡ instant
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Tool.start()
 
     // SPARK_GRAFT_SCALE_AXIS=partitions: grow PARTITION COUNT at
     // constant data instead of data volume (the commit-chain axis)
@@ -527,28 +503,13 @@ object ScaleBench {
       return
     }
 
-    def timeOne(name: String, df: => DataFrame): Double = {
-      val t0 = System.nanoTime()
-      df.count()
-      val e = (System.nanoTime() - t0) / 1e9
-      graft.operators.InternalCache.release()
-      graft.operators.SharedFrames.release()
-      spark.catalog.clearCache()
-      System.gc()
+    def timeOne(df: => DataFrame): Double = {
+      val e = Tool.secs(df.count())
+      Tool.cold(spark)
       e
     }
 
-    // untimed codegen/JIT warmup
-    try { SparkEntry.queries("q22_exact_dedup")(spark, baseDir).count(); () }
-    catch { case _: Throwable => () }
-    graft.operators.InternalCache.release()
-    graft.operators.SharedFrames.release()
-    spark.catalog.clearCache()
-
-    // SPARK_GRAFT_SCALE_ONLY=q22_exact_dedup,hardneg_fixedq restricts
-    // the run (dev loop / probe validation)
-    val only = sys.env.get("SPARK_GRAFT_SCALE_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+    Tool.warm(spark, baseDir, Seq("q22_exact_dedup"))
     val results = scala.collection.mutable.LinkedHashMap[String,
       (Double, Double)]()
     // Build EVERY replica before ANY timed query, then settle the
@@ -564,52 +525,31 @@ object ScaleBench {
     }
     // untimed warmup of each SELECTED query against the x1 dir: in the
     // full panel the first queries absorb the JVM's codegen/JIT
-    // ramp-up for everyone, but a RESTRICTED panel (SCALE_ONLY=...)
+    // ramp-up for everyone, but a RESTRICTED panel (SPARK_GRAFT_ONLY=...)
     // otherwise times the first-ever compilation of its own path
     // inside the mult=1 leg and reads an inverted ratio (measured:
     // q245 36.7 s cold-x1 vs 10.6 s warm-x10 — the composed builds'
     // dozens of distinct codegen stages dominate the small fixture)
-    if (only.isDefined) {
-      val wdir = "/tmp/graft_scale_x1"
-      for (q <- (corpusQueries ++ relationalQueries)
-          .filter(q => only.forall(_.contains(q)))) {
-        try { SparkEntry.queries(q)(spark, wdir).count(); () }
-        catch { case _: Throwable => () }
-      }
-      graft.operators.InternalCache.release()
-      graft.operators.SharedFrames.release()
-      spark.catalog.clearCache()
-      System.gc()
-    }
+    val queries = (corpusQueries ++ relationalQueries).filter(Tool.picked)
+    if (Tool.only.isDefined)
+      Tool.warm(spark, "/tmp/graft_scale_x1", queries)
+    val panel = queries.map(q => q -> SparkEntry.queries(q)) ++
+      Seq[(String, (SparkSession, String) => DataFrame)](
+        ("ann_ivf_fixedq", annFixedQ),
+        ("hardneg_fixedq", hardNegFixedQ),
+        ("ann_retrain_lifecycle", annRetrainProbe),
+        ("ann_filtered_serve", annFilteredProbe),
+        ("ann_serve_unfiltered", annUnfilteredProbe),
+        ("stream_ingest_dedup", streamIngestProbe),
+        ("agg_fold_lifecycle", (s, d) => aggFoldProbe(s, d)))
+        .filter(p => Tool.picked(p._1))
     for (m <- Seq(1, mult)) {
       val dir = s"/tmp/graft_scale_x$m"
-      graft.operators.InternalCache.release()
-      graft.operators.SharedFrames.release()
-      spark.catalog.clearCache()
-      System.gc()
-      for (q <- (corpusQueries ++ relationalQueries)
-          .filter(q => only.forall(_.contains(q)))) {
+      Tool.cold(spark)
+      for ((name, run) <- panel) {
         // min of 2: the scaling exponent needs the intrinsic cost, not
         // a GC hiccup
-        val t = math.min(
-          timeOne(q, SparkEntry.queries(q)(spark, dir)),
-          timeOne(q, SparkEntry.queries(q)(spark, dir)))
-        results(q) = if (m == 1) (t, results.get(q).map(_._2).getOrElse(0.0))
-          else (results.get(q).map(_._1).getOrElse(0.0), t)
-        println(f"""{"q":"$q","mult":$m,"sec":$t%.3f}""")
-      }
-      for ((name, probe) <- Seq(
-          ("ann_ivf_fixedq", annFixedQ _),
-          ("hardneg_fixedq", hardNegFixedQ _),
-          ("ann_retrain_lifecycle", annRetrainProbe _),
-          ("ann_filtered_serve", annFilteredProbe _),
-          ("ann_serve_unfiltered", annUnfilteredProbe _),
-          ("stream_ingest_dedup", streamIngestProbe _),
-          ("agg_fold_lifecycle",
-            (s: SparkSession, d: String) => aggFoldProbe(s, d)))
-          if only.forall(_.contains(name))) {
-        val t = math.min(timeOne(name, probe(spark, dir)),
-          timeOne(name, probe(spark, dir)))
+        val t = math.min(timeOne(run(spark, dir)), timeOne(run(spark, dir)))
         results(name) =
           if (m == 1) (t, results.get(name).map(_._2).getOrElse(0.0))
           else (results.get(name).map(_._1).getOrElse(0.0), t)

@@ -68,90 +68,56 @@ object SkewBench {
 
   def main(args: Array[String]): Unit = {
     val n = sys.env.getOrElse("SPARK_GRAFT_SKEW_ROWS", "20000000").toLong
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // local-mode partition DISCOVERY: listing an 80-partition month
-      // table as a distributed job costs ~0.2 s of scheduling per
-      // (refresh, read) pair - a composed build pays it dozens of times
-      // (measured, JobProfile q250). Up to 256 paths the driver lists
-      // in microseconds; beyond that the distributed path is right.
-      .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "256")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val spark = Tool.start(Session.builder()
       // force the shuffle-join path: a 10k-row dim would broadcast and
       // make every join probe trivially skew-free, measuring nothing
       .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-      .config("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      .config("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1"))
 
     val dir = s"/tmp/graft_skew_$n"
     buildFact(spark, n, dir)
     val fact = spark.read.parquet(s"$dir/fact.parquet")
     val dim = spark.read.parquet(s"$dir/dim.parquet")
 
-    def timeOne(df: => DataFrame): Double = {
-      val t0 = System.nanoTime()
-      df.count()
-      (System.nanoTime() - t0) / 1e9
-    }
-    def probe(name: String, df: => DataFrame): Double = {
-      val t = math.min(timeOne(df), timeOne(df))
+    def probe(name: String, df: => DataFrame): (String, Double) = {
+      val t = math.min(Tool.secs(df.count()), Tool.secs(df.count()))
       println(f"""{"probe":"$name","sec":$t%.3f}""")
-      t
+      name -> t
     }
+    def join = fact.join(dim, Seq("org_id"))
+    def plainAgg(df: DataFrame) = df.groupBy(col("org_id"))
+      .agg(sum(col("amount")).as("total"), count(lit(1)).as("n"))
 
     // untimed warmup
     fact.groupBy(col("org_id")).agg(sum(col("amount"))).count()
 
     val results = Seq(
-      "agg_plain" -> probe("agg_plain",
-        fact.groupBy(col("org_id"))
-          .agg(sum(col("amount")).as("total"), count(lit(1)).as("n"))),
-      "agg_salted" -> probe("agg_salted",
-        Skew.saltedSumCount(fact, Seq("org_id"), col("amount"),
-          "total", "n")),
-      "join_plain" -> probe("join_plain", fact.join(dim, Seq("org_id"))),
-      "join_salted" -> probe("join_salted",
-        Skew.saltedJoin(fact, dim, Seq("org_id"))),
-      "joinagg_plain" -> probe("joinagg_plain",
-        fact.join(dim, Seq("org_id"))
-          .groupBy(col("org_id"))
-          .agg(sum(col("amount")).as("total"), count(lit(1)).as("n"))),
-      "joinagg_salted" -> probe("joinagg_salted",
-        Skew.saltedJoinAgg(fact, dim, Seq("org_id"), col("amount"),
-          "total", "n")),
+      probe("agg_plain", plainAgg(fact)),
+      probe("agg_salted", Skew.saltedSumCount(fact, Seq("org_id"),
+        col("amount"), "total", "n")),
+      probe("join_plain", join),
+      probe("join_salted", Skew.saltedJoin(fact, dim, Seq("org_id"))),
+      probe("joinagg_plain", plainAgg(join)),
+      probe("joinagg_salted", Skew.saltedJoinAgg(fact, dim, Seq("org_id"),
+        col("amount"), "total", "n")),
       // hot-targeted: replicates only the hotKeyCount heaviest keys'
       // dim rows instead of the whole dim — the big-dim scale path;
       // pays one extra count pass, so on THIS small dim it should sit
       // near joinagg_salted, not beat it
-      "joinagg_hot" -> probe("joinagg_hot",
-        Skew.saltedJoinAggHot(fact, dim, Seq("org_id"), col("amount"),
-          "total", "n"))) ++ {
+      probe("joinagg_hot", Skew.saltedJoinAggHot(fact, dim,
+        Seq("org_id"), col("amount"), "total", "n"))) ++ {
       // same two plain probes with AQE's skew split tuned AGGRESSIVE
       // (default 256 MB threshold leaves sub-256 MB stragglers whole):
       // does hand-tuned AQE close the gap the salt opens?
-      spark.conf.set(
-        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
-        "16m")
-      spark.conf.set(
-        "spark.sql.adaptive.advisoryPartitionSizeInBytes", "16m")
-      spark.conf.set(
-        "spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2")
-      val tuned = Seq(
-        "join_plain_aqe_tuned" -> probe("join_plain_aqe_tuned",
-          fact.join(dim, Seq("org_id"))),
-        "joinagg_plain_aqe_tuned" -> probe("joinagg_plain_aqe_tuned",
-          fact.join(dim, Seq("org_id"))
-            .groupBy(col("org_id"))
-            .agg(sum(col("amount")).as("total"),
-              count(lit(1)).as("n"))))
-      spark.conf.unset(
-        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes")
-      spark.conf.unset("spark.sql.adaptive.advisoryPartitionSizeInBytes")
-      spark.conf.unset("spark.sql.adaptive.skewJoin.skewedPartitionFactor")
+      val aqe = Seq(
+        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" ->
+          "16m",
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "16m",
+        "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2")
+      aqe.foreach { case (k, v) => spark.conf.set(k, v) }
+      val tuned = Seq(probe("join_plain_aqe_tuned", join),
+        probe("joinagg_plain_aqe_tuned", plainAgg(join)))
+      aqe.foreach { case (k, _) => spark.conf.unset(k) }
       tuned
     }
 

@@ -1,41 +1,25 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare.
+  * `SPARK_GRAFT_ONLY=q1_x,q2_y` restricts the dump. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // local-mode partition DISCOVERY: listing an 80-partition month
-      // table as a distributed job costs ~0.2 s of scheduling per
-      // (refresh, read) pair - a composed build pays it dozens of times
-      // (measured, JobProfile q250). Up to 256 paths the driver lists
-      // in microseconds; beyond that the distributed path is right.
-      .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "256")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Tool.start()
     new java.io.File(outDir).mkdirs()
-    // dev convenience: SPARK_GRAFT_ONLY=q1_x,q2_y restricts the dump
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
     // A throwing query must become a recorded error, never an absent row —
     // round 6 proved that silent shrinkage hides regressions (VERDICT r6).
     val errors = scala.collection.mutable.LinkedHashMap[String, String]()
     SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
+      .filter { case (name, _) => Tool.picked(name) }
       .foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
         errors(name) = s"${e.getClass.getSimpleName}: " +
-          Option(e.getMessage).getOrElse("").take(500)
+          Tool.message(e).take(500)
       }
       // targeted release of operator-internal caches (the documented
       // library lifecycle). NOT spark.catalog.clearCache(): that would
@@ -45,28 +29,12 @@ object Verify {
       graft.operators.InternalCache.release()
     }
     // shared materialized intermediates live for the whole dump
-    graft.operators.SharedFrames.release()
-    spark.catalog.clearCache()
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Tool.cold(spark)
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      Tool.jsonMap(SparkEntry.oracleSql))
     // errors.json is always written (possibly {}) so its absence can never
     // be confused with "no failures"
-    val errJson = errors
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/errors.json"), errJson)
+    Files.writeString(Paths.get(s"$outDir/errors.json"), Tool.jsonMap(errors))
     if (errors.nonEmpty)
       System.err.println(s"[verify] ${errors.size} queries FAILED: " +
         errors.keys.mkString(", "))

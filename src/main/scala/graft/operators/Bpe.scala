@@ -99,7 +99,7 @@ object Bpe {
         // round r+1 analyzes and codegens ONE fold stage over an
         // in-memory leaf instead of re-planning, re-compiling, and
         // re-executing the whole r-stage chain from the source — the
-        // O(k²) round cost PlanTime billed to the q148/q120 trainer
+        // O(k²) round cost `Plans time` billed to the q148/q120 trainer
         // (guide §3.3 "materialising an intermediate truncates the
         // plan"). The last round's winner needs no merged state.
         // At 100 TB the trainer runs on a hash-sampled corpus slice
@@ -119,7 +119,7 @@ object Bpe {
     * Column multiplies the input subtree at every level —
     * [[mergedTokens]] references its input ~5 times, so k chained
     * merges inline ~5^k copies of the base tokenizer expression
-    * (q148 at k = 6: a ~15 s planning bill measured by PlanTime).
+    * (q148 at k = 6: a ~15 s planning bill measured by `Plans time`).
     * Only use this form for k ≤ 2; pipelines apply longer tables with
     * [[applyMergesStaged]]. */
   def applyMerges(toks: Column, merges: Seq[(String, String)]): Column =

@@ -212,7 +212,7 @@ object Similarity {
     * query plans"): each weight used to enter the plan as a ~8-node
     * md5/conv/cast subtree, and a weights array carries `dims` of
     * them — q53's five ANN legs totalled tens of thousands of
-    * expression nodes, 12.6 s of driver-side analysis (PlanTime,
+    * expression nodes, 12.6 s of driver-side analysis (`Plans time`,
     * matching JobProfile's 10.3 s driver gap). A precomputed literal
     * array is ONE node. */
   private def hashWeight(tag: String): Double =

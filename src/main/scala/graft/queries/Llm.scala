@@ -1472,6 +1472,20 @@ SELECT method, CAST(n_exact AS BIGINT) AS n_exact,
 FROM rec"""
   }
 
+  /** One recall row for an ANN leg: `n_exact` exact top-k pairs,
+    * `n_hit` of them the leg's `approx` (query_id, neighbor_id) pairs
+    * also return, and `recall` = n_hit / n_exact rounded to 6. */
+  private[queries] def recallLeg(exact: DataFrame)(method: String,
+      approx: DataFrame): DataFrame = {
+    val hit = exact.join(approx.select("query_id", "neighbor_id"),
+      Seq("query_id", "neighbor_id"), "left_semi")
+      .agg(count(lit(1)).as("n_hit"))
+    exact.agg(count(lit(1)).as("n_exact")).crossJoin(hit)
+      .select(lit(method).as("method"), col("n_exact"), col("n_hit"),
+        round(col("n_hit").cast("double") / col("n_exact"), 6)
+          .as("recall"))
+  }
+
   /** ANN retrieval-quality measurement: recall@$IvfK of each
     * approximate method (single- and multi-probe LSH and IVF) against
     * the exact brute-force top-k — the number a production ANN needs
@@ -1492,15 +1506,7 @@ FROM rec"""
       bruteForceShared(s, dir)
         .filter(col("rank") <= IvfK)
         .select("query_id", "neighbor_id"))
-    def leg(method: String, approx: org.apache.spark.sql.DataFrame) = {
-      val hit = exact.join(approx.select("query_id", "neighbor_id"),
-        Seq("query_id", "neighbor_id"), "left_semi")
-        .agg(count(lit(1)).as("n_hit"))
-      exact.agg(count(lit(1)).as("n_exact")).crossJoin(hit)
-        .select(lit(method).as("method"), col("n_exact"), col("n_hit"),
-          round(col("n_hit").cast("double") / col("n_exact"), 6)
-            .as("recall"))
-    }
+    val leg = recallLeg(exact) _
     leg("ivf", ivfShared(s, dir))
       .unionByName(leg("ivf_multiprobe",
         Similarity.ivfTopK(v, "vec_id", "embedding",
@@ -1631,15 +1637,7 @@ FROM rec"""
       Similarity.bruteForceTopK(cand, "vec_id", "embedding",
           q, "query_id", "qvec", IvfK)
         .select("query_id", "neighbor_id"))
-    def leg(method: String, approx: org.apache.spark.sql.DataFrame) = {
-      val hit = exact.join(approx.select("query_id", "neighbor_id"),
-        Seq("query_id", "neighbor_id"), "left_semi")
-        .agg(count(lit(1)).as("n_hit"))
-      exact.agg(count(lit(1)).as("n_exact")).crossJoin(hit)
-        .select(lit(method).as("method"), col("n_exact"), col("n_hit"),
-          round(col("n_hit").cast("double") / col("n_exact"), 6)
-            .as("recall"))
-    }
+    val leg = recallLeg(exact) _
     val post = ivfShared(s, dir)
       .join(v.select(col("vec_id").as("neighbor_id"), col("label")),
         Seq("neighbor_id"))

@@ -821,15 +821,7 @@ object Prep {
     val exact = InternalCache.persist(Llm.bruteForceShared(s, dir)
       .filter(col("rank") <= Llm.IvfK)
       .select("query_id", "neighbor_id"))
-    def leg(method: String, approx: DataFrame) = {
-      val hit = exact.join(approx.select("query_id", "neighbor_id"),
-        Seq("query_id", "neighbor_id"), "left_semi")
-        .agg(count(lit(1)).as("n_hit"))
-      exact.agg(count(lit(1)).as("n_exact")).crossJoin(hit)
-        .select(lit(method).as("method"), col("n_exact"), col("n_hit"),
-          round(col("n_hit").cast("double") / col("n_exact"), 6)
-            .as("recall"))
-    }
+    val leg = Llm.recallLeg(exact) _
     leg("ivf_hash", Llm.ivfShared(s, dir))
       .unionByName(leg("ivf_trained", trained))
   }
@@ -1564,15 +1556,7 @@ object Prep {
     val exact = InternalCache.persist(Llm.bruteForceShared(s, dir)
       .filter(col("rank") <= Llm.IvfK)
       .select("query_id", "neighbor_id"))
-    def leg(method: String, approx: DataFrame) = {
-      val hit = exact.join(approx.select("query_id", "neighbor_id"),
-        Seq("query_id", "neighbor_id"), "left_semi")
-        .agg(count(lit(1)).as("n_hit"))
-      exact.agg(count(lit(1)).as("n_exact")).crossJoin(hit)
-        .select(lit(method).as("method"), col("n_exact"), col("n_hit"),
-          round(col("n_hit").cast("double") / col("n_exact"), 6)
-            .as("recall"))
-    }
+    val leg = Llm.recallLeg(exact) _
     leg("ivf_frozen",
         AnnIndex.topK(s, nF, q, "query_id", "qvec", Llm.IvfK))
       .unionByName(leg("ivf_retrained",
@@ -1703,7 +1687,7 @@ object Prep {
     val merges = bpeMergesShared(s, dir).map { case (_, x, y, _) => (x, y) }
     // staged form (one projection per merge): the single-Column fold
     // inlined ~5^k copies of the tokenizer subtree — a measured ~15 s
-    // planning bill at k = 6 (PlanTime r14); same row semantics
+    // planning bill at k = 6 (`Plans time`, r14); same row semantics
     Bpe.applyMergesStaged(
         Tables.documents(s, dir)
           .select(col("lang"), tokens(col("text")).as("t"))

@@ -3,7 +3,6 @@ package graft
 import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.Par
 
@@ -13,14 +12,7 @@ import graft.operators.Par
   * finish (no abandoned in-flight write) with every sibling failure
   * attached, and each branch sees the session active on its own
   * thread. */
-class ParSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]")
-    .appName("par-spec")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class ParSpec extends SparkSpec {
 
   test("runs every thunk and joins all before returning") {
     val n = new AtomicInteger(0)

@@ -40,7 +40,7 @@ class PlanContractSpec extends SparkSpec {
   test("q82: the shard-packing prefix-sum has no unpartitioned window") {
     val p = plan("q82_shard_packing")
     // every Window line must carry a partition spec (three bracket
-    // groups: [fns], [partSpec], [orderSpec]) — the PlanLint rule,
+    // groups: [fns], [partSpec], [orderSpec]) — the `Plans lint` rule,
     // locked here for the prefix-sum specifically
     val bad = p.linesIterator.map(_.replaceFirst("^[-+:*(0-9)\\s]*", ""))
       .filter(_.startsWith("Window "))

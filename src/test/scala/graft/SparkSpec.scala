@@ -4,8 +4,8 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** One shared local session for every suite (session startup dominates
-  * test wall-clock otherwise). UTC + tiny shuffle width to keep plans
-  * deterministic and fast on test-sized data. */
+  * test wall-clock otherwise), built by the same factory as the tool
+  * mains. */
 object TestSpark {
   val warehouse = "/tmp/graft_test_warehouse"
 
@@ -15,22 +15,12 @@ object TestSpark {
     // LOCATION_ALREADY_EXISTS: start every run from an empty warehouse
     org.apache.commons.io.FileUtils.deleteDirectory(
       new java.io.File(warehouse))
-    val s = SparkSession.builder()
-      .master("local[2]")
+    Tool.start(Session.builder(2)
       .appName("graft-test")
+      // extras over the factory: a tiny shuffle width keeps plans fast
+      // on test-sized data, and tables land in a throwaway warehouse
       .config("spark.sql.shuffle.partitions", "4")
-      // local-mode partition DISCOVERY: listing an 80-partition month
-      // table as a distributed job costs ~0.2 s of scheduling per
-      // (refresh, read) pair - a composed build pays it dozens of times
-      // (measured, JobProfile q250). Up to 256 paths the driver lists
-      // in microseconds; beyond that the distributed path is right.
-      .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "256")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir", warehouse)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
+      .config("spark.sql.warehouse.dir", warehouse))
   }
 }
 
